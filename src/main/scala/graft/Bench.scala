@@ -368,6 +368,34 @@ object Bench {
       }
     }
 
+  /** One measurement attempt: a warm pass + 3 timed passes + the
+    * three contention flags over ITS OWN passes + the absolute band
+    * check. A failed attempt has median -1. */
+  case class Attempt(median: Double, passes: Seq[(Double, Double, Double)],
+                     contended: Boolean, unstable: Boolean, starved: Boolean,
+                     overband: Boolean) {
+    def flagged: Boolean =
+      median >= 0 && (contended || unstable || starved || overband)
+    /** Timed, and no pass disturbed by the box. `overband` does not
+      * count: it is absolute, so of two attempts the faster is never
+      * the more over its band. */
+    def clean: Boolean = median >= 0 && !contended && !unstable && !starved
+    def tags: String = Seq(
+      if (contended) Some("contended") else None,
+      if (unstable) Some("unstable") else None,
+      if (starved) Some("starved") else None,
+      if (overband) Some("overband") else None).flatten.mkString("+")
+  }
+
+  /** The heal-retry keep rule: of two clean attempts the faster;
+    * otherwise an unflagged retry; otherwise the smaller (less
+    * polluted) timed median. */
+  def keep(first: Attempt, second: Attempt): Attempt =
+    if (first.clean && second.clean) { if (second.median < first.median) second else first }
+    else if (!second.flagged && second.median >= 0) second
+    else if (second.median >= 0 && (first.median < 0 || second.median < first.median)) second
+    else first
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -504,20 +532,6 @@ object Bench {
         Map.empty
     }
 
-    // one measurement attempt: a warm pass + 3 timed passes + the
-    // three contention flags over ITS OWN passes + the absolute
-    // band check
-    case class Attempt(median: Double, passes: Seq[(Double, Double, Double)],
-                       contended: Boolean, unstable: Boolean, starved: Boolean,
-                       overband: Boolean) {
-      def flagged: Boolean =
-        median >= 0 && (contended || unstable || starved || overband)
-      def tags: String = Seq(
-        if (contended) Some("contended") else None,
-        if (unstable) Some("unstable") else None,
-        if (starved) Some("starved") else None,
-        if (overband) Some("overband") else None).flatten.mkString("+")
-    }
     def attempt(name: String): Attempt = {
       val warm = timeOnce(name) // warm this query's codegen/broadcast paths
       val times = Seq(timeOnce(name), timeOnce(name), timeOnce(name)).flatten
@@ -610,9 +624,8 @@ object Bench {
     // of nothing banded-and-healthy), and each retry waits the load
     // out, re-prepares its fixture (idempotent, untimed) and
     // re-measures ONCE while budget remains. The headline median is
-    // the unflagged attempt's (if both stay flagged, the smaller —
-    // less polluted — wins); the displaced first median is recorded
-    // in `retried` so nothing is hidden. Forced-load demo: docs/
+    // picked by [[keep]]; the displaced first median is recorded in
+    // `retried` so nothing is hidden. Forced-load demo: docs/
     // PLANS.md round-14 notes.
     // The retry phase gets its own budget FLOOR (round 14): a sweep
     // that drains the shared pool waiting out mid-run load leaves
@@ -648,11 +661,7 @@ object Bench {
         val second = attempt(name)
         graft.operators.OpCache.release(spark)
         spark.catalog.clearCache()
-        val pick =
-          if (!second.flagged && second.median >= 0) second
-          else if (second.median >= 0 &&
-            (first.median < 0 || second.median < first.median)) second
-          else first
+        val pick = keep(first, second)
         byName(name) = (pick, first.passes ++ second.passes, Some(first.median))
       }
     }

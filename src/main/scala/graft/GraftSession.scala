@@ -17,6 +17,7 @@ object GraftSession {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    graft.io.LocalFs.install(spark)
     spark
   }
 

@@ -117,9 +117,15 @@ object Similarity {
     // frame appears. Cost model unchanged at 100 TB: the max is one
     // map-side-combinable aggregate over the vector frame, paid once
     // per invocation instead of ≥ once per consumer subtree.
+    seedStride(e, k) match {
+      case Some(stride) => e.filter(col("vec_id") % lit(stride) === 0)
+      case None => e.filter(lit(false)) // empty frame: no seeds
+    }
+  }
+
+  private def seedStride(e: DataFrame, k: Long): Option[Long] = {
     val mx = OpCache.scalarRow(e.agg(max(col("vec_id")).as("mx")))
-    if (mx.isNullAt(0)) e.filter(lit(false)) // empty frame: no seeds
-    else e.filter(col("vec_id") % lit(mx.getLong(0) / k + 1L) === 0)
+    if (mx.isNullAt(0)) None else Some(mx.getLong(0) / k + 1L)
   }
 
   private[graft] def boundedCents(e: DataFrame, k: Long = ProductionK): DataFrame =
@@ -571,19 +577,28 @@ object Similarity {
   def shipIvfpqIndex(spark: SparkSession, dir: String, name: String,
                      buckets: Int = 8,
                      corpusPred: Column = lit(true)): Unit =
-    shipIvfpqIndexFrom(quantized(spark, dir).filter(corpusPred), name, buckets)
+    shipIvfpqIndexFrom(quantized(spark, dir).filter(corpusPred), name, buckets,
+      corpus = s"the corpus where $corpusPred")
 
   /** The freeze over any (vec_id, label, qv, nrm) frame — also
-    * driven at replicated scale by [[graft.Stress]]. */
+    * driven at replicated scale by [[graft.Stress]]. Fails, naming
+    * `corpus`, when the frame holds no PQ codebook seed: an index with
+    * an empty codebook would answer every search with 0 rows. */
   private[graft] def shipIvfpqIndexFrom(e: DataFrame, name: String,
-                                        buckets: Int): Unit = {
+                                        buckets: Int,
+                                        corpus: => String = "the corpus"): Unit = {
+    val seeds = boundedSeeds(e)
+    require(!seeds.isEmpty, {
+      val rule = seedStride(e, ProductionK).fold("it is empty")(s => s"no vec_id % $s = 0")
+      s"IVFPQ index '$name': $corpus holds no PQ codebook seed ($rule); every search would return 0 rows"
+    })
     val (coarse, f2c, assign) = ivf2Index(e)
-    val codes = pqCodes(e, boundedSeeds(e))
+    val codes = pqCodes(e, seeds)
     graft.sources.AnnIndexStore.write(
       graft.sources.FrozenAnnIndex(
         coarse = coarse,
         f2c = f2c.select("f_id", "c1", "f_qv", "f_nrm"),
-        codebook = boundedSeeds(e).select("vec_id", "qv", "nrm"),
+        codebook = seeds.select("vec_id", "qv", "nrm"),
         refined = refinedCents(e),
         assign = assign.select("vec_id", "label", "cell"),
         codes = codes),

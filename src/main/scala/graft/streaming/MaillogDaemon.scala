@@ -283,6 +283,8 @@ object MaillogDaemon {
     if (c.logfile.nonEmpty)
       installLogger(spark, c.logfile)
     MaillogStream.useRocksDbStateStore(spark)
+    // the session may be the caller's, not one GraftSession prepared
+    graft.io.LocalFs.install(spark)
     // a path that is not (yet) a directory gets the tailer: the
     // reference's -maillog names a file that may not exist at boot
     // (tail -F waits for creation — FileTailer's no-file poll case);

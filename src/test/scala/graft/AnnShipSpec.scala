@@ -539,4 +539,28 @@ class AnnShipSpec extends SparkSpec {
       assert(refreshed != want, "the re-freeze must be visible to new loads")
     } finally Dedup.dropBloomIndex(spark, "ship_bloom")
   }
+
+  test("a corpus filter that holds out every PQ codebook seed fails the ship and names the filter") {
+    // 2 000 vectors: the seeds are the multiples of 1999 div 64 + 1 = 32,
+    // all of them multiples of 16
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq-holdout").toString
+    spark.range(2000).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)), i => cos(col("id") * (i + 1)))
+        .cast("array<float>").as("embedding"),
+      (col("id") % 4).cast("int").as("label"))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val name = s"ship_holdout_${System.nanoTime}"
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Similarity.shipIvfpqIndex(spark, dir, name, buckets = 2, corpusPred = col("vec_id") % 16 =!= 0)
+      }
+      // the filter as Spark prints it, then the seed rule it defeated
+      assert(e.getMessage.contains("%(vec_id, 16)") && e.getMessage.contains("vec_id % 32 = 0"), e.getMessage)
+      assert(FreezeStore.readPtr(spark, name).isEmpty, "no generation ships")
+      // a hold-out that leaves the seeds in ships an index that answers
+      Similarity.shipIvfpqIndex(spark, dir, name, buckets = 2, corpusPred = col("vec_id") % 16 =!= 1)
+      assert(Similarity.searchFrozenIvfpq(spark, dir, name, queryPred = col("vec_id") % 16 === 1)
+        .count() > 0)
+    } finally AnnIndexStore.drop(spark, name)
+  }
 }
