@@ -270,7 +270,7 @@ object Bench {
       // fan-out per freeze — the probe entry times the arrival-scaled
       // path only)
       if (name == "g04_frozen_probe") {
-        graft.sources.GraphIndexStore.drop(spark, "bench_graph")
+        graft.sources.FreezeStore.dropAll(spark, "bench_graph")
         graft.sources.GraphIndexStore.freeze(
           graft.operators.Graph.corpusEdgeIndex(spark, sfDir), "bench_graph")
       }
@@ -278,7 +278,7 @@ object Bench {
       // UNTIMED (the one tokenize+tf pass per freeze — the search
       // entry times only the posting-list-scaled read)
       if (name == "p21_frozen_search") {
-        graft.sources.Bm25IndexStore.drop(spark, "bench_text")
+        graft.sources.FreezeStore.dropAll(spark, "bench_text")
         graft.sources.Bm25IndexStore.freeze(
           graft.operators.Pipeline.chunkFrame(
             graft.sources.Tables.documents(spark, sfDir)), "bench_text")
@@ -287,7 +287,7 @@ object Bench {
       // pair fan-out per freeze — the re-rank entry times the
       // arrival-scaled merge + one rank chain only)
       if (name == "g07_rerank_phase") {
-        graft.sources.GraphIndexStore.drop(spark, "bench_graph_w")
+        graft.sources.FreezeStore.dropAll(spark, "bench_graph_w")
         graft.sources.GraphIndexStore.freeze(
           graft.operators.Graph.corpusWeightedEdges(spark, sfDir),
           "bench_graph_w")
@@ -296,7 +296,7 @@ object Bench {
       // search+fuse only — the ship cost is the families' existing
       // freeze entries' story)
       if (name == "t22_hybrid_frozen") {
-        graft.sources.Bm25IndexStore.drop(spark, "bench_hybrid_text")
+        graft.sources.FreezeStore.dropAll(spark, "bench_hybrid_text")
         graft.sources.Bm25IndexStore.freeze(
           graft.operators.TextAnalysis.docChunkFrame(spark, sfDir),
           "bench_hybrid_text")
@@ -319,7 +319,7 @@ object Bench {
       // rounds per freeze — the serving entry times the per-doc
       // fold only)
       if (name == "t31_frozen_serve") {
-        graft.sources.TokenizerStore.drop(spark, "bench_tokenizer")
+        graft.sources.FreezeStore.dropAll(spark, "bench_tokenizer")
         graft.sources.TokenizerStore.freeze(
           graft.sources.Tables.documents(spark, sfDir)
             .select("doc_id", "text"),
@@ -356,7 +356,7 @@ object Bench {
         if (!new java.io.File(pngCorpus(sfDir)).exists())
           graft.operators.Multimodal.syntheticPngCorpus(spark, sfDir)
             .write.mode("overwrite").parquet(pngCorpus(sfDir))
-        graft.sources.MediaIndexStore.drop(spark, "bench_media")
+        graft.sources.FreezeStore.dropAll(spark, "bench_media")
         graft.sources.MediaIndexStore.freeze(
           graft.operators.Multimodal.mediaHashes(
             spark.read.parquet(pngCorpus(sfDir))

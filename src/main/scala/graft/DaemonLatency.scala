@@ -96,14 +96,10 @@ object DaemonLatency {
         f"$t=${lat(t).last}%.2fs").mkString(" "))
     }
 
-    def q(v: Seq[Double], f: Double): Double = {
-      val s = v.sorted
-      s(math.min(s.size - 1, (f * s.size).toInt))
-    }
     def block(f: Double) = tables.map(t =>
-      f""""$t":${q(lat(t).toSeq, f)}%.3f""").mkString("{", ",", "}")
+      f""""$t":${LatencyCard.quantile(lat(t).toSeq, f)}%.3f""").mkString("{", ",", "}")
     // "min" strips the per-wave trigger-phase alignment term — the
-    // phase-robust round-over-round reading (see ClassifierLatency)
+    // phase-robust round-over-round reading (see LatencyCard)
     val minBlock = tables.map(t =>
       f""""$t":${lat(t).min}%.3f""").mkString("{", ",", "}")
     println(s"""{"metric":"daemon_latency","trigger":"ProcessingTime(${trigSec}s)","unit":"sec","waves":$waves,"min":$minBlock,"median":${block(0.5)},"p90":${block(0.9)}}""")

@@ -159,7 +159,7 @@ object Stress {
         lit("x").as("label"), col("embedding"))
     time("frozen append")(
       graft.operators.Similarity.appendToFrozenIndex(arrivalsRep, "stress_frozen"))
-    graft.sources.AnnIndexStore.drop(spark, "stress_frozen")
+    graft.sources.FreezeStore.dropAll(spark, "stress_frozen")
 
     // FILTERED IVFPQ (s15) under the same asymmetry with an 8-way
     // label: the (cell, label) candidate key cuts ADC fan-out by the
@@ -316,7 +316,7 @@ object Stress {
         base.filter(col("doc_id") % 10 < 8))
       .select((col("doc_id") + 1000000000L).as("doc_id"),
         col("h_hi"), col("h_lo"))
-    graft.sources.MediaIndexStore.drop(spark, "stress_media")
+    graft.sources.FreezeStore.dropAll(spark, "stress_media")
     time("media index freeze")(
       graft.sources.MediaIndexStore.freeze(medCorp, "stress_media"))
     val nMedMatch = time("media frozen match")(
@@ -324,7 +324,7 @@ object Stress {
         .matchFrozen(spark, medArr, "stress_media").count())
     time("media append (fixed batch)")(
       graft.sources.MediaIndexStore.append(medArr, "stress_media"))
-    graft.sources.MediaIndexStore.drop(spark, "stress_media")
+    graft.sources.FreezeStore.dropAll(spark, "stress_media")
 
     // scene-aware sampling (mm07) over the replicated frame index:
     // both windows are partitioned by doc_id (bounded by item
@@ -421,7 +421,7 @@ object Stress {
     // to the live screen above (same algebra, persisted operand);
     // append of the fixed batch must stay FLAT (O(arrivals)); compact
     // is the bounded bucketed rewrite
-    graft.sources.GraphIndexStore.drop(spark, "stress_graph")
+    graft.sources.FreezeStore.dropAll(spark, "stress_graph")
     time("graph freeze")(graft.sources.GraphIndexStore.freeze(
       corpusRep, "stress_graph"))
     val nFrozenClosed = time("graph frozen probe")(
@@ -435,7 +435,7 @@ object Stress {
       graft.sources.GraphIndexStore.compact(spark, "stress_graph"))
     val nGraphEdges = graft.sources.GraphIndexStore
       .edges(spark, "stress_graph").count()
-    graft.sources.GraphIndexStore.drop(spark, "stress_graph")
+    graft.sources.FreezeStore.dropAll(spark, "stress_graph")
     corpusRep.unpersist()
 
     // INCREMENTAL PAGERANK (g07) at replication scale (round 14):
@@ -451,7 +451,7 @@ object Stress {
     val cwRep = graft.operators.Graph.weightedPairs(
       lirep.filter(col("l_orderkey") % 10 < 8)).persist()
     cwRep.count()
-    graft.sources.GraphIndexStore.drop(spark, "stress_graph_w")
+    graft.sources.FreezeStore.dropAll(spark, "stress_graph_w")
     time("g07 weighted freeze")(graft.sources.GraphIndexStore.freeze(
       cwRep, "stress_graph_w"))
     val arrW = graft.operators.Graph.weightedPairs(
@@ -461,7 +461,7 @@ object Stress {
       .unionByName(arrW).groupBy("x", "y").agg(sum(col("w")).as("w"))
     val nRank = time("g07 merge+rank chain")(
       graft.operators.Graph.pagerankFrom(mergedW).count())
-    graft.sources.GraphIndexStore.drop(spark, "stress_graph_w")
+    graft.sources.FreezeStore.dropAll(spark, "stress_graph_w")
     cwRep.unpersist()
 
     // context-window chunker (p19) over the replicated corpus: a
@@ -519,7 +519,7 @@ object Stress {
     // query terms' lists grow mult×; the corpus never re-tokenizes);
     // the append of the FIXED base arrival batch must stay FLAT
     // (O(arrivals)); compact is the bounded bucketed rewrite
-    graft.sources.Bm25IndexStore.drop(spark, "stress_text")
+    graft.sources.FreezeStore.dropAll(spark, "stress_text")
     time("text freeze")(graft.sources.Bm25IndexStore.freeze(
       graft.operators.Pipeline.chunkFrame(docs), "stress_text"))
     val nTextSearch = time("text frozen search")(
@@ -531,7 +531,7 @@ object Stress {
       graft.sources.Bm25IndexStore.compact(spark, "stress_text"))
     val nTextSearch2 = graft.sources.Bm25IndexStore.searchFrozen(spark,
       "stress_text", graft.operators.TextAnalysis.Bm25Queries).count()
-    graft.sources.Bm25IndexStore.drop(spark, "stress_text")
+    graft.sources.FreezeStore.dropAll(spark, "stress_text")
 
     // inequality semi-join (q61) with BOTH sides replicated on one
     // order stride (how the order/line pair actually grows): each

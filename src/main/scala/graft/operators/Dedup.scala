@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFns._
-import graft.sources.Tables
+import graft.sources.{Bucketing, FreezeStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -373,21 +373,6 @@ object Dedup {
       .groupBy("doc_id").agg(min(col("corp_doc")).as("near_match"))
   }
 
-  /** SHIP the frozen NEAR-DUP band index (round 17, for p29's
-    * all-frozen nightly): the corpus slice's MinHash band buckets on
-    * the PRODUCTION id path (d02_production / stream_neardup's
-    * algebra — term ids are the vocab-free 60-bit md5-prefix hash,
-    * so a corpus row's signature NEVER moves as arrivals land; the
-    * rank-vocabulary ids d02/d15 use for oracle smallness are
-    * arrival-DEPENDENT and cannot freeze). One (band, bandkey) →
-    * min corpus doc_id row per occupied bucket, saved under the
-    * [[shipBloomIndex]] versioning mechanism (atomic pointer flip,
-    * superseded generation retained one freeze). The serving probe
-    * ([[nearMatchesFrozen]]) is then ARRIVAL-scaled end-to-end:
-    * per-row signature algebra + one hint-free equi-join against the
-    * frozen buckets — the corpus is never re-banded per nightly. */
-  private val NearParts = Seq("bands", "members")
-
   /** Band rows of a (doc_id, text) frame on the production id path —
     * ONE definition for the freeze, the frozen probe, the staleness
     * monitor and the absorb (per-row Column algebra; no corpus
@@ -406,34 +391,38 @@ object Dedup {
     bandRows.groupBy("band", "bandkey")
       .agg(min(col("doc_id")).as("corp_doc"), count(lit(1)).as("occ"))
 
-  private def writeNearGen(spark: SparkSession, name: String, gen: Long,
-                           buckets: DataFrame, members: DataFrame): Unit = {
-    import graft.sources.{Bucketing, FreezeStore}
-    Bucketing.resetTable(spark, FreezeStore.genTable(name, gen, "bands"))
-    buckets.withColumn("gen", lit(gen)).write.mode("overwrite")
-      .format("parquet").saveAsTable(FreezeStore.genTable(name, gen, "bands"))
-    Bucketing.resetTable(spark, FreezeStore.genTable(name, gen, "members"))
-    members.withColumn("gen", lit(gen)).write.mode("overwrite")
-      .format("parquet").saveAsTable(FreezeStore.genTable(name, gen, "members"))
-    FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-    val prev = gen - 1
-    if (prev - 1 >= 1) NearParts.foreach(p =>
-      Bucketing.resetTable(spark, FreezeStore.genTable(name, prev - 1, p)))
-  }
-
-  def shipNearDupIndex(spark: SparkSession, dir: String, name: String): Unit =
-    graft.sources.FreezeStore.withFamilyLease(spark, name) {
-      val prev = graft.sources.FreezeStore.readPtr(spark, name)
-        .map(_._1).getOrElse(0L)
-      val corpus = Tables.documents(spark, dir)
-        .filter(!bloomArrival).select("doc_id", "text")
-      writeNearGen(spark, name, prev + 1,
-        nearBuckets(prodBandRows(corpus)), corpus.select("doc_id"))
+  /** Commit one near-dup generation ([[FreezeStore.commit]], one
+    * superseded generation retained) — returns it. */
+  private def writeNearGen(spark: SparkSession, name: String,
+                           buckets: DataFrame, members: DataFrame): Long =
+    FreezeStore.commit(spark, name, retain = 1) { gen =>
+      Bucketing.resetTable(spark, FreezeStore.genTable(name, gen, "bands"))
+      buckets.withColumn("gen", lit(gen)).write.mode("overwrite")
+        .format("parquet").saveAsTable(FreezeStore.genTable(name, gen, "bands"))
+      Bucketing.resetTable(spark, FreezeStore.genTable(name, gen, "members"))
+      members.withColumn("gen", lit(gen)).write.mode("overwrite")
+        .format("parquet").saveAsTable(FreezeStore.genTable(name, gen, "members"))
     }
 
-  /** Drop a shipped near-dup index — pointer and all generations. */
-  def dropNearDupIndex(spark: SparkSession, name: String): Unit =
-    graft.sources.FreezeStore.dropAll(spark, name)
+  /** SHIP the frozen NEAR-DUP band index (round 17, for p29's
+    * all-frozen nightly): the corpus slice's MinHash band buckets on
+    * the PRODUCTION id path (d02_production / stream_neardup's
+    * algebra — term ids are the vocab-free 60-bit md5-prefix hash,
+    * so a corpus row's signature NEVER moves as arrivals land; the
+    * rank-vocabulary ids d02/d15 use for oracle smallness are
+    * arrival-DEPENDENT and cannot freeze). One (band, bandkey) →
+    * min corpus doc_id row per occupied bucket, saved under the
+    * [[shipBloomIndex]] versioning mechanism (atomic pointer flip,
+    * superseded generation retained one freeze). The serving probe
+    * ([[nearMatchesFrozen]]) is then ARRIVAL-scaled end-to-end:
+    * per-row signature algebra + one hint-free equi-join against the
+    * frozen buckets — the corpus is never re-banded per nightly. */
+  def shipNearDupIndex(spark: SparkSession, dir: String, name: String): Unit = {
+    val corpus = Tables.documents(spark, dir)
+      .filter(!bloomArrival).select("doc_id", "text")
+    writeNearGen(spark, name,
+      nearBuckets(prodBandRows(corpus)), corpus.select("doc_id"))
+  }
 
   /** The near screen off the FROZEN band index: arriving (doc_id,
     * text) rows band through the literal production signature
@@ -444,10 +433,8 @@ object Dedup {
     * Pointer resolved ONCE per call (wholly-one-generation). */
   def nearMatchesFrozen(spark: SparkSession, arrivals: DataFrame,
                         name: String): DataFrame = {
-    import graft.sources.FreezeStore
-    val (gen, _) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen near-dup index named $name"))
-    val corpBands = spark.table(FreezeStore.genTable(name, gen, "bands"))
+    val (gen, batches) = FreezeStore.live(spark, name)
+    val corpBands = FreezeStore.part(spark, name, gen, batches, "bands")
       .select("band", "bandkey", "corp_doc")
     // cost note (round-17 ProfilePasses read): ~1.5s of this probe's
     // ~1.9s wall at sf0.1 is QUERY PLANNING on the 16-lambda
@@ -523,11 +510,9 @@ object Dedup {
     * Arrival-scaled: per-row banding + one bucket-bounded join. */
   def nearDupStaleness(spark: SparkSession, arrivals: DataFrame,
                        name: String): DataFrame = {
-    import graft.sources.FreezeStore
-    val (gen, _) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen near-dup index named $name"))
+    val (gen, batches) = FreezeStore.live(spark, name)
     bandDriftFrom(prodBandRows(arrivals),
-      spark.table(FreezeStore.genTable(name, gen, "bands")).drop("gen"))
+      FreezeStore.part(spark, name, gen, batches, "bands"))
   }
 
   /** CLOSE THE DRIFT→REFREEZE LOOP for the band index: when the
@@ -547,8 +532,7 @@ object Dedup {
     * generation when it fired. */
   def refreezeNearDupIfStale(spark: SparkSession, arrivals: DataFrame,
                              name: String,
-                             maxNewShare: Double = 0.2): Option[Long] = {
-    import graft.sources.FreezeStore
+                             maxNewShare: Double = 0.2): Option[Long] =
     FreezeStore.withFamilyLease(spark, name) {
       val s = nearDupStaleness(spark, arrivals, name)
         .agg(coalesce(sum(col("n_new_buckets")), lit(0L)).as("nb"),
@@ -569,7 +553,6 @@ object Dedup {
       if (!stale) None
       else absorbNearDupArrivals(spark, arrivals, name)
     }
-  }
 
   /** ABSORB arrivals into the frozen band index UNCONDITIONALLY —
     * the mergeable-absorb step alone, factored out of
@@ -587,12 +570,10 @@ object Dedup {
     * absorb is a no-op None (no pointless generation). ONE lease
     * hold across read → merge → flip. */
   def absorbNearDupArrivals(spark: SparkSession, arrivals: DataFrame,
-                            name: String): Option[Long] = {
-    import graft.sources.FreezeStore
+                            name: String): Option[Long] =
     FreezeStore.withFamilyLease(spark, name) {
-      val (gen, _) = FreezeStore.readPtr(spark, name).getOrElse(
-        throw new IllegalStateException(s"no frozen near-dup index named $name"))
-      val members = spark.table(FreezeStore.genTable(name, gen, "members"))
+      val (gen, batches) = FreezeStore.live(spark, name)
+      val members = FreezeStore.part(spark, name, gen, batches, "members")
         .select("doc_id")
       // one row per FRESH doc (round-17 review): the members
       // anti-join only guards against PRIOR generations, so an
@@ -609,18 +590,16 @@ object Dedup {
         .localCheckpoint(false)
       if (fresh.isEmpty) None
       else {
-        val merged = spark.table(FreezeStore.genTable(name, gen, "bands"))
+        val merged = FreezeStore.part(spark, name, gen, batches, "bands")
           .select("band", "bandkey", "corp_doc", "occ")
           .unionByName(nearBuckets(prodBandRows(fresh))
             .select("band", "bandkey", "corp_doc", "occ"))
           .groupBy("band", "bandkey")
           .agg(min(col("corp_doc")).as("corp_doc"), sum(col("occ")).as("occ"))
-        writeNearGen(spark, name, gen + 1, merged,
-          members.unionByName(fresh.select("doc_id")))
-        Some(gen + 1)
+        Some(writeNearGen(spark, name, merged,
+          members.unionByName(fresh.select("doc_id"))))
       }
     }
-  }
 
   /** Bloom hash family: k = 3 pairwise-independent (a·x + b) mod p
     * hashes over the 60-bit md5 prefix, same LCG-seeded family style
@@ -805,23 +784,14 @@ object Dedup {
     * geometry probed against old words would silently mis-position
     * every bit test). The superseded generation is retained for live
     * readers and retired by the freeze after next. */
-  private val BloomParts = Seq("geom", "words", "hash")
-
   def shipBloomIndex(spark: SparkSession, dir: String, name: String,
-                     bitsPerElem: Long = 10L): Unit =
-    graft.sources.FreezeStore.withFamilyLease(spark, name) {
-      val prev = graft.sources.FreezeStore.readPtr(spark, name)
-        .map(_._1).getOrElse(0L)
-      val base = bloomBase(Tables.documents(spark, dir)).filter(!bloomArrival)
-      val geom = bloomGeom(base, bitsPerElem)
-      writeBloomGen(spark, name, prev + 1, geom,
-        bloomWords(bloomPosed(base.crossJoin(broadcast(geom)))),
-        base.groupBy("h").agg(min(col("doc_id")).as("exact_match")))
-    }
-
-  /** Drop a shipped Bloom screen — pointer and all generations. */
-  def dropBloomIndex(spark: SparkSession, name: String): Unit =
-    graft.sources.FreezeStore.dropAll(spark, name)
+                     bitsPerElem: Long = 10L): Unit = {
+    val base = bloomBase(Tables.documents(spark, dir)).filter(!bloomArrival)
+    val geom = bloomGeom(base, bitsPerElem)
+    writeBloomGen(spark, name, geom,
+      bloomWords(bloomPosed(base.crossJoin(broadcast(geom)))),
+      base.groupBy("h").agg(min(col("doc_id")).as("exact_match")))
+  }
 
   /** The saturation aggregate — ONE definition for the hash-gated
     * d22 monitor key and the store-backed read
@@ -871,13 +841,10 @@ object Dedup {
     * table): word-table-scaled, no corpus pass, the pointer resolved
     * once. */
   def bloomSaturationFrozen(spark: SparkSession, name: String): DataFrame = {
-    import graft.sources.FreezeStore
-    val (gen, _) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen bloom screen named $name"))
-    def part(p: String) = spark.table(FreezeStore.genTable(name, gen, p))
-      .drop("gen")
-    bloomSaturationFrom(part("words"), part("geom"),
-      part("hash").agg(count(lit(1)).as("n_hashes")))
+    val (gen, batches) = FreezeStore.live(spark, name)
+    def frozen(p: String) = FreezeStore.part(spark, name, gen, batches, p)
+    bloomSaturationFrom(frozen("words"), frozen("geom"),
+      frozen("hash").agg(count(lit(1)).as("n_hashes")))
   }
 
   /** ABSORB accepted arrivals into the frozen Bloom screen — the
@@ -889,13 +856,10 @@ object Dedup {
     * anti-join (a replayed batch adds nothing). Returns the new
     * generation (no-op None when nothing fresh arrived). */
   def absorbBloomArrivals(spark: SparkSession, arrivals: DataFrame,
-                          name: String): Option[Long] = {
-    import graft.sources.FreezeStore
+                          name: String): Option[Long] =
     FreezeStore.withFamilyLease(spark, name) {
-      val (gen, _) = FreezeStore.readPtr(spark, name).getOrElse(
-        throw new IllegalStateException(s"no frozen bloom screen named $name"))
-      def part(p: String) = spark.table(FreezeStore.genTable(name, gen, p))
-        .drop("gen")
+      val (gen, batches) = FreezeStore.live(spark, name)
+      def frozen(p: String) = FreezeStore.part(spark, name, gen, batches, p)
       // checkpoint the anti-joined batch (round-17 review): THREE
       // actions read it (the isEmpty probe and both part writes) —
       // re-evaluating a membership-scaled anti-join per action is
@@ -904,24 +868,22 @@ object Dedup {
       // row sets, breaking the no-false-negative guarantee
       val fresh = bloomBase(arrivals)
         .groupBy("h").agg(min(col("doc_id")).as("exact_match"))
-        .join(part("hash").select("h"), Seq("h"), "left_anti")
+        .join(frozen("hash").select("h"), Seq("h"), "left_anti")
         .localCheckpoint(false)
       if (fresh.isEmpty) None
       else {
-        val geom = part("geom")
+        val geom = frozen("geom")
         val freshWords = bloomWords(bloomPosed(
           fresh.select(col("exact_match").as("doc_id"), col("h"),
               xmOf(col("h")).as("xm"))
             .crossJoin(broadcast(geom))))
-        val mergedWords = part("words").unionByName(freshWords)
+        val mergedWords = frozen("words").unionByName(freshWords)
           .groupBy("word").agg(expr("bit_or(bits)").as("bits"))
-        val mergedHash = part("hash")
+        val mergedHash = frozen("hash")
           .unionByName(fresh.select("h", "exact_match"))
-        writeBloomGen(spark, name, gen + 1, geom, mergedWords, mergedHash)
-        Some(gen + 1)
+        Some(writeBloomGen(spark, name, geom, mergedWords, mergedHash))
       }
     }
-  }
 
   /** CLOSE THE SATURATION→REBUILD LOOP: when the live filter's fill
     * share exceeds `maxFill` (exact cross-multiplied integers —
@@ -933,17 +895,15 @@ object Dedup {
     * rebuild → flip. Returns the new generation when it fired. */
   def refreezeBloomIfSaturated(spark: SparkSession, name: String,
                                maxFill: Double = 0.35,
-                               bitsPerElem: Long = 10L): Option[Long] = {
-    import graft.sources.FreezeStore
+                               bitsPerElem: Long = 10L): Option[Long] =
     FreezeStore.withFamilyLease(spark, name) {
       val s = bloomSaturationFrozen(spark, name)
         .select("bits_set", "mbits").head()
       val bp = math.round(maxFill * 10000)
       if (s.getLong(0) * 10000 <= bp * s.getLong(1)) None
       else {
-        val (gen, _) = FreezeStore.readPtr(spark, name).get
-        val hash = spark.table(FreezeStore.genTable(name, gen, "hash"))
-          .drop("gen")
+        val (gen, batches) = FreezeStore.live(spark, name)
+        val hash = FreezeStore.part(spark, name, gen, batches, "hash")
         // the ONE sizing definition (ADVICE r17): the hash part's
         // rows are already distinct, so bloomGeom's distinct pass is
         // a no-op semantically — the rebuild and a fresh ship land on
@@ -953,29 +913,26 @@ object Dedup {
           hash.select(col("exact_match").as("doc_id"), col("h"),
               xmOf(col("h")).as("xm"))
             .crossJoin(broadcast(geom))))
-        writeBloomGen(spark, name, gen + 1, geom, words, hash)
-        Some(gen + 1)
+        Some(writeBloomGen(spark, name, geom, words, hash))
       }
     }
-  }
 
-  private def writeBloomGen(spark: SparkSession, name: String, gen: Long,
-      geom: DataFrame, words: DataFrame, hash: DataFrame): Unit = {
-    import graft.sources.{Bucketing, FreezeStore}
-    def save(df: DataFrame, p: String): Unit = {
-      Bucketing.resetTable(spark, FreezeStore.genTable(name, gen, p))
-      df.withColumn("gen", lit(gen)).write.mode("overwrite").format("parquet")
-        .saveAsTable(FreezeStore.genTable(name, gen, p))
+  /** Commit one Bloom generation ([[FreezeStore.commit]], one
+    * superseded generation retained) — returns it. */
+  private def writeBloomGen(spark: SparkSession, name: String,
+      geom: DataFrame, words: DataFrame, hash: DataFrame): Long =
+    FreezeStore.commit(spark, name, retain = 1) { gen =>
+      def save(df: DataFrame, p: String): Unit = {
+        Bucketing.resetTable(spark, FreezeStore.genTable(name, gen, p))
+        df.withColumn("gen", lit(gen)).write.mode("overwrite").format("parquet")
+          .saveAsTable(FreezeStore.genTable(name, gen, p))
+      }
+      // merged parts read the SUPERSEDED generation's tables, which
+      // stay in place through the writes (retention only sweeps after
+      // the flip, and keeps the superseded generation), so plain
+      // writes are safe
+      save(geom, "geom"); save(words, "words"); save(hash, "hash")
     }
-    // materialize merged parts BEFORE any reset could touch inputs:
-    // all three read the SUPERSEDED generation's tables, which stay
-    // in place (only gen-2-back retires), so plain writes are safe
-    save(geom, "geom"); save(words, "words"); save(hash, "hash")
-    FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-    val prev = gen - 1
-    if (prev - 1 >= 1) BloomParts.foreach(p =>
-      Bucketing.resetTable(spark, FreezeStore.genTable(name, prev - 1, p)))
-  }
 
   /** d19's screen over the arrival slice against a FROZEN filter
     * shipped by [[shipBloomIndex]] — the literal bloomPosed/
@@ -997,14 +954,11 @@ object Dedup {
     * resolves ONCE and all three components come off it. */
   def bloomScreenFrozen(spark: SparkSession, arrivals: DataFrame,
                         name: String): DataFrame = {
-    import graft.sources.FreezeStore
-    val (gen, _) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen bloom screen named $name"))
-    def part(p: String) = spark.table(FreezeStore.genTable(name, gen, p))
-      .drop("gen")
+    val (gen, batches) = FreezeStore.live(spark, name)
+    def frozen(p: String) = FreezeStore.part(spark, name, gen, batches, p)
     val inc = bloomBase(arrivals)
-    bloomVerdicts(bloomPosed(inc.crossJoin(broadcast(part("geom")))),
-      part("words"), part("hash"))
+    bloomVerdicts(bloomPosed(inc.crossJoin(broadcast(frozen("geom")))),
+      frozen("words"), frozen("hash"))
   }
 
   /** qa05's swept filter sizes (bits per corpus element). Also

@@ -581,12 +581,13 @@ object Similarity {
       corpus = s"the corpus where $corpusPred")
 
   /** The freeze over any (vec_id, label, qv, nrm) frame — also
-    * driven at replicated scale by [[graft.Stress]]. Fails, naming
+    * driven at replicated scale by [[graft.Stress]]. Returns the
+    * committed generation. Fails, naming
     * `corpus`, when the frame holds no PQ codebook seed: an index with
     * an empty codebook would answer every search with 0 rows. */
   private[graft] def shipIvfpqIndexFrom(e: DataFrame, name: String,
                                         buckets: Int,
-                                        corpus: => String = "the corpus"): Unit = {
+                                        corpus: => String = "the corpus"): Long = {
     val seeds = boundedSeeds(e)
     require(!seeds.isEmpty, {
       val rule = seedStride(e, ProductionK).fold("it is empty")(s => s"no vec_id % $s = 0")
@@ -691,10 +692,7 @@ object Similarity {
     val stale = an > 0 && cn > 0 &&
       BigInt(as_) * cn < BigInt(cs) * an - BigInt(maxFitDriftMicro) * an * cn
     if (!stale) None
-    else {
-      shipIvfpqIndexFrom(qc.unionByName(qa), name, buckets)
-      graft.sources.FreezeStore.readPtr(spark, name).map(_._1)
-    }
+    else Some(shipIvfpqIndexFrom(qc.unionByName(qa), name, buckets))
     }
   }
 

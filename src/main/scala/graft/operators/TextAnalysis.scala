@@ -528,7 +528,7 @@ object TextAnalysis {
                    annName: String = "t22_ann",
                    ship: Boolean = true): DataFrame = {
     if (ship) {
-      graft.sources.Bm25IndexStore.drop(spark, textName)
+      graft.sources.FreezeStore.dropAll(spark, textName)
       graft.sources.Bm25IndexStore.freeze(docChunkFrame(spark, dir), textName)
       Similarity.shipIvfpqIndex(spark, dir, annName)
     }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import FreezeStore.genTable
+
 /** The persisted components of a frozen IVFPQ similarity index —
   * what [[graft.operators.Similarity.shipIvfpqIndex]] writes and a
   * fresh session's `searchFrozenIvfpq` reads back.
@@ -53,64 +55,37 @@ object AnnIndexStore {
     "coarse" -> idx.coarse, "f2c" -> idx.f2c, "codebook" -> idx.codebook,
     "refined" -> idx.refined, "assign" -> idx.assign, "codes" -> idx.codes)
 
-  private def gt(name: String, gen: Long, part: String): String =
-    FreezeStore.genTable(name, gen, part)
-
-  private def liveGen(spark: SparkSession, name: String): (Long, Seq[Long]) =
-    FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen index named $name"))
-
-  /** Persist every component under generation-versioned tables and
-    * commit with one pointer flip. Re-freezing the same name is safe
-    * while readers are live: the last `retain` SUPERSEDED generations'
-    * tables are kept, so a plan bound before the flip keeps reading
-    * its own whole generation.
-    *
-    * RETENTION CONTRACT (VERDICT r10): a plan bound to generation N
-    * survives exactly `retain` subsequent re-freezes — the
-    * (retain+1)-th drops N's tables mid-plan (vanished tables /
-    * FAILED_READ_FILE on the bound reader). With the default
-    * `retain = 1`, the minimum safe re-freeze interval is therefore
-    * the longest-running search you allow: a staleness-triggered
-    * refresh loop (qa04) firing twice inside one long query's
-    * lifetime needs `retain = 2+` or a refresh cool-down. */
+  /** Persist every component under generation-versioned tables,
+    * commit with one pointer flip ([[FreezeStore.commit]] — the
+    * retention contract lives there) and return the committed
+    * generation. Re-freezing the same name is safe while readers are
+    * live: the last `retain` SUPERSEDED generations' tables are kept,
+    * so a plan bound before the flip keeps reading its own whole
+    * generation. With the default
+    * `retain = 1`, the minimum safe re-freeze interval is the
+    * longest-running search you allow: a staleness-triggered refresh
+    * loop (qa04) firing twice inside one long query's lifetime needs
+    * `retain = 2+` or a refresh cool-down. */
   def write(idx: FrozenAnnIndex, name: String, buckets: Int = 8,
-            retain: Int = 1): Unit = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
+            retain: Int = 1): Long = {
     val spark = idx.coarse.sparkSession
-    // whole readPtr → component writes → flip under ONE family lease
-    // (ADVICE r13: gen assignment outside it let two freezers race
-    // the same generation tables); flipPtr re-enters the hold
-    FreezeStore.withFamilyLease(spark, name) {
-    val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-    val gen = prev + 1
     val p = parts(idx)
-    Small.foreach { s =>
-      // reset first: an orphaned warehouse dir from a previous JVM or
-      // a crashed earlier attempt at this generation fails saveAsTable
-      // with LOCATION_ALREADY_EXISTS (see Bucketing.resetTable;
-      // writeBucketed resets internally)
-      Bucketing.resetTable(spark, gt(name, gen, s))
-      p(s).withColumn("gen", lit(gen))
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(gt(name, gen, s))
-    }
-    Bucketed.foreach { s =>
-      Bucketing.writeBucketed(
-        p(s).withColumn("batch", lit(0L)).withColumn("gen", lit(gen)),
-        gt(name, gen, s), "vec_id", buckets)
-    }
-    // the COMMIT: until this flip, readers resolve the previous
-    // generation and none of the tables above are reachable
-    FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-    // retire EVERY generation past the retention window — the newest
-    // `retain` superseded ones may still back live readers' plans. A
-    // catalog sweep (not just gen prev−retain) so a `retain` lowered
-    // between freezes still clears the generations the larger window
-    // left behind; the listing is one in-memory catalog scan
-    FreezeStore.listGens(spark, name)
-      .filter(g => g < gen && g > 0 && g <= prev - retain)
-      .foreach(dropGen(spark, name, _))
+    FreezeStore.commit(spark, name, retain) { gen =>
+      Small.foreach { s =>
+        // reset first: an orphaned warehouse dir from a previous JVM or
+        // a crashed earlier attempt at this generation fails saveAsTable
+        // with LOCATION_ALREADY_EXISTS (see Bucketing.resetTable;
+        // writeBucketed resets internally)
+        Bucketing.resetTable(spark, genTable(name, gen, s))
+        p(s).withColumn("gen", lit(gen))
+          .write.mode("overwrite").format("parquet")
+          .saveAsTable(genTable(name, gen, s))
+      }
+      Bucketed.foreach { s =>
+        Bucketing.writeBucketed(
+          p(s).withColumn("batch", lit(0L)).withColumn("gen", lit(gen)),
+          genTable(name, gen, s), "vec_id", buckets)
+      }
     }
   }
 
@@ -121,14 +96,12 @@ object AnnIndexStore {
     * committed-batch filter is a pushed parquet predicate over the
     * tiny batch column; it does not disturb the bucketing. */
   def load(spark: SparkSession, name: String): FrozenAnnIndex = {
-    val (gen, batches) = liveGen(spark, name)
-    def small(s: String) = spark.table(gt(name, gen, s)).drop("gen")
-    def big(s: String) = spark.table(gt(name, gen, s))
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
+    val (gen, batches) = FreezeStore.live(spark, name)
+    def component(s: String) = FreezeStore.part(spark, name, gen, batches, s)
     FrozenAnnIndex(
-      coarse = small("coarse"), f2c = small("f2c"),
-      codebook = small("codebook"), refined = small("refined"),
-      assign = big("assign"), codes = big("codes"))
+      coarse = component("coarse"), f2c = component("f2c"),
+      codebook = component("codebook"), refined = component("refined"),
+      assign = component("assign"), codes = component("codes"))
   }
 
   /** Append arrival rows to the two corpus-scale tables, RE-USING
@@ -170,18 +143,14 @@ object AnnIndexStore {
     * freeze) instead of flipping the pointer backward. */
   def append(assign: DataFrame, codes: DataFrame, name: String): Unit = {
     val spark = assign.sparkSession
-    def bucketsOf(t: String): Int = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$t is not bucketed"))
     // the ONE reserve-then-commit protocol (FreezeStore.appendBatch);
     // this store's part: bucket-preserving batch-stamped landings
     FreezeStore.appendBatch(spark, name) { (gen, batch) =>
       def land(df: DataFrame, s: String): Unit = {
-        val t = gt(name, gen, s)
+        val t = genTable(name, gen, s)
         df.withColumn("batch", lit(batch)).withColumn("gen", lit(gen))
           .write.mode("append").format("parquet")
-          .bucketBy(bucketsOf(t), "vec_id").sortBy("vec_id")
+          .bucketBy(FreezeStore.bucketsOf(spark, t), "vec_id").sortBy("vec_id")
           .saveAsTable(t)
       }
       land(codes, "codes")
@@ -196,13 +165,13 @@ object AnnIndexStore {
     * prevent it, the stamp detects it) fails here. Returns
     * (n_assign, n_codes, consistent). */
   def verifyConsistency(spark: SparkSession, name: String): (Long, Long, Boolean) = {
-    val (gen, batches) = liveGen(spark, name)
-    def committed(s: String) = spark.table(gt(name, gen, s))
+    val (gen, batches) = FreezeStore.live(spark, name)
+    def committed(s: String) = spark.table(genTable(name, gen, s))
       .filter(col("batch").isin(batches: _*))
     val na = committed("assign").count()
     val nc = committed("codes").count()
     val genOk = (Small ++ Bucketed).forall { s =>
-      val r = spark.table(gt(name, gen, s))
+      val r = spark.table(genTable(name, gen, s))
         .agg(min(col("gen")), max(col("gen"))).head()
       !r.isNullAt(0) && r.getLong(0) == gen && r.getLong(1) == gen
     }
@@ -242,13 +211,9 @@ object AnnIndexStore {
     FreezeStore.withFamilyLease(spark, name) {
       val (gen, batches) = FreezeStore.compactGate(spark, name, vacuumOrphans)
       Bucketed.foreach { s =>
-        val t = gt(name, gen, s)
+        val t = genTable(name, gen, s)
         FreezeStore.recoverTable(spark, t)
-        val meta = spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-        val buckets = meta.bucketSpec
-          .map(_.numBuckets)
-          .getOrElse(throw new IllegalStateException(s"$t is not bucketed"))
+        val buckets = FreezeStore.bucketsOf(spark, t)
         // the REAL bucketed scan is forced for the rewrite — see
         // FreezeStore.withForcedBucketedScan for the rule-ordering trap
         // (measured here in round 9: 4 tasks × 2 buckets from an 8-file
@@ -268,20 +233,7 @@ object AnnIndexStore {
   def recover(spark: SparkSession, name: String): Unit = {
     FreezeStore.recoverPtr(spark, name)
     FreezeStore.readPtr(spark, name).foreach { case (gen, _) =>
-      Bucketed.foreach(s => FreezeStore.recoverTable(spark, gt(name, gen, s)))
+      Bucketed.foreach(s => FreezeStore.recoverTable(spark, genTable(name, gen, s)))
     }
   }
-
-  private def dropGen(spark: SparkSession, name: String, gen: Long): Unit =
-    (Small ++ Bucketed).foreach { s =>
-      Bucketing.resetTable(spark, gt(name, gen, s))
-      Bucketing.resetTable(spark, s"${gt(name, gen, s)}_compacting")
-      Bucketing.resetTable(spark, s"${gt(name, gen, s)}_precompact")
-    }
-
-  /** Drop the whole family — pointer, every generation, and any
-    * half-finished temp or orphaned warehouse directory a dead JVM
-    * left behind (test hygiene / retiring an index). */
-  def drop(spark: SparkSession, name: String): Unit =
-    FreezeStore.dropAll(spark, name)
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import FreezeStore.genTable
+
 /** The FROZEN INVERTED TEXT INDEX — sparse retrieval's member of the
   * frozen-index lattice (dense ANN: [[AnnIndexStore]]; perceptual
   * media: [[MediaIndexStore]]; exact membership: the shipped Bloom
@@ -47,12 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object Bm25IndexStore {
 
-  private val Bucketed = Seq("postings", "dfreq")
-  private val Plain = Seq("lens", "stats")
-
-  private def gt(name: String, gen: Long, part: String): String =
-    FreezeStore.genTable(name, gen, part)
-
   /** Freeze the chunk-granular text index over a (ck, n_tok, t)
     * chunk frame ([[graft.operators.Pipeline.chunkFrame]] — the ONE
     * chunk identity/tokenization definition). Returns the committed
@@ -67,51 +63,31 @@ object Bm25IndexStore {
     * same way, so frozen==live stays structural, TextIndexSpec). */
   def freeze(chunks: DataFrame, name: String, buckets: Int = 8,
              retain: Int = 1): Long = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
     val spark = chunks.sparkSession
-    // whole readPtr → component writes → flip under ONE family lease
-    // (ADVICE r13: gen assignment outside it let two freezers race
-    // the same generation tables); flipPtr re-enters the hold
-    FreezeStore.withFamilyLease(spark, name) {
-    val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-    val gen = prev + 1
-    val tok = chunks.select(col("ck"), explode(col("t")).as("term"))
-    val tf = graft.operators.OpCache.cached(
-      tok.groupBy("ck", "term").agg(count(lit(1)).as("tf")))
-    val dl = tf.groupBy("ck").agg(sum(col("tf")).as("dl"))
-    def stamp(df: DataFrame): DataFrame =
-      df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
-    Bucketing.writeBucketed(
-      stamp(tf.select(col("term"), col("ck"), col("tf"))),
-      gt(name, gen, "postings"), "term", buckets)
-    Bucketing.writeBucketed(
-      stamp(tf.groupBy("term").agg(count(lit(1)).as("df"))),
-      gt(name, gen, "dfreq"), "term", buckets)
-    Bucketing.resetTable(spark, gt(name, gen, "lens"))
-    stamp(dl.select(col("ck"), col("dl")))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(gt(name, gen, "lens"))
-    Bucketing.resetTable(spark, gt(name, gen, "stats"))
-    stamp(dl.agg(count(lit(1)).as("n_chunks_tot"),
-        sum(col("dl")).as("sum_dl")))
-      .coalesce(1).write.mode("overwrite").format("parquet")
-      .saveAsTable(gt(name, gen, "stats"))
-    FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-    FreezeStore.listGens(spark, name)
-      .filter(g => g < gen && g > 0 && g <= prev - retain)
-      .foreach { g =>
-        (Bucketed ++ Plain).foreach(p =>
-          Bucketing.resetTable(spark, gt(name, g, p)))
-      }
-    gen
+    FreezeStore.commit(spark, name, retain) { gen =>
+      val tok = chunks.select(col("ck"), explode(col("t")).as("term"))
+      val tf = graft.operators.OpCache.cached(
+        tok.groupBy("ck", "term").agg(count(lit(1)).as("tf")))
+      val dl = tf.groupBy("ck").agg(sum(col("tf")).as("dl"))
+      def stamp(df: DataFrame): DataFrame =
+        df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
+      Bucketing.writeBucketed(
+        stamp(tf.select(col("term"), col("ck"), col("tf"))),
+        genTable(name, gen, "postings"), "term", buckets)
+      Bucketing.writeBucketed(
+        stamp(tf.groupBy("term").agg(count(lit(1)).as("df"))),
+        genTable(name, gen, "dfreq"), "term", buckets)
+      Bucketing.resetTable(spark, genTable(name, gen, "lens"))
+      stamp(dl.select(col("ck"), col("dl")))
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(genTable(name, gen, "lens"))
+      Bucketing.resetTable(spark, genTable(name, gen, "stats"))
+      stamp(dl.agg(count(lit(1)).as("n_chunks_tot"),
+          sum(col("dl")).as("sum_dl")))
+        .coalesce(1).write.mode("overwrite").format("parquet")
+        .saveAsTable(genTable(name, gen, "stats"))
     }
   }
-
-  /** One generation-bound, committed-batch-filtered component. */
-  private def part(spark: SparkSession, name: String, gen: Long,
-                   batches: Seq[Long], p: String): DataFrame =
-    spark.table(gt(name, gen, p))
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
 
   /** SEARCH the frozen index: top-`topK` chunks per query by the
     * t18-gated Okapi algebra ([[graft.operators.Pipeline.bm25Micro]]
@@ -126,8 +102,7 @@ object Bm25IndexStore {
   def searchFrozen(spark: SparkSession, name: String,
                    queries: Seq[(Int, Seq[String])], topK: Int = 10): DataFrame = {
     import spark.implicits._
-    val (gen, batches) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen text index named $name"))
+    val (gen, batches) = FreezeStore.live(spark, name)
     val terms = queries.flatMap(_._2).distinct
     val q = queries.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
       .toDF("query_id", "term")
@@ -135,12 +110,12 @@ object Bm25IndexStore {
     // freeze time — appends never write them); the filter keeps the
     // read honest if tooling ever lands rows there
     graft.operators.Pipeline.bm25Rank(
-      part(spark, name, gen, batches, "postings")
+      FreezeStore.part(spark, name, gen, batches, "postings")
         .filter(col("term").isin(terms: _*)),
-      part(spark, name, gen, batches, "lens").select(col("ck"), col("dl")),
-      part(spark, name, gen, batches, "dfreq")
+      FreezeStore.part(spark, name, gen, batches, "lens").select(col("ck"), col("dl")),
+      FreezeStore.part(spark, name, gen, batches, "dfreq")
         .filter(col("term").isin(terms: _*)),
-      part(spark, name, gen, batches, "stats")
+      FreezeStore.part(spark, name, gen, batches, "stats")
         .withColumn("avgdl", col("sum_dl").cast("double") / col("n_chunks_tot"))
         .select("n_chunks_tot", "avgdl"),
       q, topK)
@@ -156,10 +131,6 @@ object Bm25IndexStore {
     * corpus pass. */
   def append(chunks: DataFrame, name: String): Unit = {
     val spark = chunks.sparkSession
-    def bucketsOf(t: String): Int = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$t is not bucketed"))
     // the ONE reserve-then-commit protocol (FreezeStore.appendBatch);
     // this store's part: posting + length landings, postings keeping
     // the term bucket/sort layout
@@ -168,14 +139,14 @@ object Bm25IndexStore {
         df.withColumn("batch", lit(batch)).withColumn("gen", lit(gen))
       val tok = chunks.select(col("ck"), explode(col("t")).as("term"))
       val tf = tok.groupBy("ck", "term").agg(count(lit(1)).as("tf"))
-      val pt = gt(name, gen, "postings")
+      val pt = genTable(name, gen, "postings")
       stamp(tf.select(col("term"), col("ck"), col("tf")))
         .write.mode("append").format("parquet")
-        .bucketBy(bucketsOf(pt), "term").sortBy("term")
+        .bucketBy(FreezeStore.bucketsOf(spark, pt), "term").sortBy("term")
         .saveAsTable(pt)
       stamp(chunks.select(col("ck"), col("n_tok").as("dl")))
         .write.mode("append").format("parquet")
-        .saveAsTable(gt(name, gen, "lens"))
+        .saveAsTable(genTable(name, gen, "lens"))
     }
   }
 
@@ -190,14 +161,13 @@ object Bm25IndexStore {
     * corpus pass. */
   def staleness(spark: SparkSession, arrivals: DataFrame,
                 name: String): DataFrame = {
-    val (gen, batches) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen text index named $name"))
+    val (gen, batches) = FreezeStore.live(spark, name)
     // the LITERAL t20 drift algebra (Pipeline.vocabDriftRow — one
     // definition, TextIndexSpec pins the equality) over the
     // persisted vocabulary and frozen stats
     graft.operators.Pipeline.vocabDriftRow(arrivals,
-      part(spark, name, gen, batches, "dfreq").select("term"),
-      part(spark, name, gen, batches, "stats")
+      FreezeStore.part(spark, name, gen, batches, "dfreq").select("term"),
+      FreezeStore.part(spark, name, gen, batches, "stats")
         .select((col("sum_dl").cast("double") / col("n_chunks_tot"))
           .as("frozen_avgdl")))
   }
@@ -238,15 +208,15 @@ object Bm25IndexStore {
     val bp = math.round(maxUnseenShare * 10000)
     if (nPost == 0L || nUnseen * 10000 <= bp * nPost) None
     else {
-      val (gen, batches) = FreezeStore.readPtr(spark, name).get
+      val (gen, batches) = FreezeStore.live(spark, name)
       // rebuild (ck, n_tok, t) from the persisted inverted form:
       // each (term, tf) posting contributes tf copies of the term —
       // token ORDER is lost, which BM25 never reads (bag-of-words)
-      val corpus = part(spark, name, gen, batches, "postings")
+      val corpus = FreezeStore.part(spark, name, gen, batches, "postings")
         .select(col("ck"),
           explode(expr("array_repeat(term, cast(tf as int))")).as("term"))
         .groupBy("ck").agg(collect_list(col("term")).as("t"))
-        .join(part(spark, name, gen, batches, "lens")
+        .join(FreezeStore.part(spark, name, gen, batches, "lens")
           .select(col("ck"), col("dl").as("n_tok")), "ck")
         .select("ck", "n_tok", "t")
       // drop already-absorbed arrivals (the caller-contract guard)
@@ -274,29 +244,17 @@ object Bm25IndexStore {
               vacuumOrphans: Boolean = false): Unit =
     FreezeStore.withFamilyLease(spark, name) {
       val (gen, batches) = FreezeStore.compactGate(spark, name, vacuumOrphans)
-      val pt = gt(name, gen, "postings")
+      val pt = genTable(name, gen, "postings")
       FreezeStore.recoverTable(spark, pt)
-      val buckets = spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(pt))
-        .bucketSpec.map(_.numBuckets)
-        .getOrElse(throw new IllegalStateException(s"$pt is not bucketed"))
+      val buckets = FreezeStore.bucketsOf(spark, pt)
       FreezeStore.compactTable(spark, pt, batches, (df, staging) =>
         FreezeStore.withForcedBucketedScan(spark) {
           df.write.mode("overwrite").format("parquet")
             .bucketBy(buckets, "term").sortBy("term")
             .saveAsTable(staging)
         })
-      FreezeStore.compactTable(spark, gt(name, gen, "lens"), batches,
+      FreezeStore.compactTable(spark, genTable(name, gen, "lens"), batches,
         (df, staging) => df.repartition(buckets)
           .write.mode("overwrite").format("parquet").saveAsTable(staging))
     }
-
-  /** The live generation number (audit hooks). */
-  def liveGen(spark: SparkSession, name: String): Option[Long] =
-    FreezeStore.readPtr(spark, name).map(_._1)
-
-  /** Drop the whole family — pointer and every generation. */
-  def drop(spark: SparkSession, name: String): Unit =
-    FreezeStore.dropAll(spark, name)
 }

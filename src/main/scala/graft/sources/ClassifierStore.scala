@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import FreezeStore.genTable
+
 /** The FROZEN QUALITY-CLASSIFIER ARTIFACT — the learned gate's member
   * of the frozen-index lattice (dense ANN: [[AnnIndexStore]]; media:
   * [[MediaIndexStore]]; sparse text: [[Bm25IndexStore]]; graph:
@@ -42,32 +44,24 @@ import org.apache.spark.sql.functions._
   */
 object ClassifierStore {
 
-  private val Parts = Seq("vocab", "weights", "stats")
-
-  private def gt(name: String, gen: Long, part: String): String =
-    FreezeStore.genTable(name, gen, part)
-
   /** TRAIN on the given (doc_id, text) corpus and freeze the pocket
     * artifact as the new live generation. Returns the committed
     * generation. The whole train → component writes → flip sequence
-    * holds the family lease (the Bm25IndexStore.freeze rule). */
+    * is one [[FreezeStore.commit]]. */
   def freeze(docs: DataFrame, name: String, buckets: Int = 8,
              retain: Int = 1): Long = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
     val spark = docs.sparkSession
     import spark.implicits._
-    FreezeStore.withFamilyLease(spark, name) {
-      val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-      val gen = prev + 1
+    FreezeStore.commit(spark, name, retain) { gen =>
       val (v, w, nErr) = graft.operators.Quality.pocketArtifact(spark, docs)
       val wDf = w.toDF("f", "w")
       def stamp(df: DataFrame): DataFrame =
         df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
       Bucketing.writeBucketed(stamp(v.select(col("term"), col("tid"))),
-        gt(name, gen, "vocab"), "term", buckets)
-      Bucketing.resetTable(spark, gt(name, gen, "weights"))
+        genTable(name, gen, "vocab"), "term", buckets)
+      Bucketing.resetTable(spark, genTable(name, gen, "weights"))
       stamp(wDf).coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(gt(name, gen, "weights"))
+        .saveAsTable(genTable(name, gen, "weights"))
       // the drift baseline: corpus scored under the JUST-trained
       // artifact (exact integer operands; one corpus pass, the
       // vocab/feature frames are still OpCache-warm from training)
@@ -77,27 +71,11 @@ object ClassifierStore {
           coalesce(sum(col("score")), lit(0L)).as("sum_score"))
         .select(lit(nErr).as("train_err"), col("n_docs"), col("n_keep"),
           col("sum_score"))
-      Bucketing.resetTable(spark, gt(name, gen, "stats"))
+      Bucketing.resetTable(spark, genTable(name, gen, "stats"))
       stamp(base).coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(gt(name, gen, "stats"))
-      FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-      FreezeStore.listGens(spark, name)
-        .filter(g => g < gen && g > 0 && g <= prev - retain)
-        .foreach(g => Parts.foreach(p =>
-          Bucketing.resetTable(spark, gt(name, g, p))))
-      gen
+        .saveAsTable(genTable(name, gen, "stats"))
     }
   }
-
-  /** One generation-bound, committed-batch-filtered component. */
-  private def part(spark: SparkSession, name: String, gen: Long,
-                   batches: Seq[Long], p: String): DataFrame =
-    spark.table(gt(name, gen, p))
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
-
-  private def livePtr(spark: SparkSession, name: String): (Long, Seq[Long]) =
-    FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen classifier named $name"))
 
   /** SCORE a (doc_id, text) frame against the live artifact — the
     * serving read path: the literal
@@ -107,10 +85,10 @@ object ClassifierStore {
     * call (wholly-one-generation). */
   def scoreFrozen(spark: SparkSession, docs: DataFrame,
                   name: String): DataFrame = {
-    val (gen, batches) = livePtr(spark, name)
+    val (gen, batches) = FreezeStore.live(spark, name)
     graft.operators.Quality.frozenScores(docs,
-      part(spark, name, gen, batches, "vocab"),
-      part(spark, name, gen, batches, "weights"))
+      FreezeStore.part(spark, name, gen, batches, "vocab"),
+      FreezeStore.part(spark, name, gen, batches, "weights"))
   }
 
   /** CALIBRATE the live artifact's gate (the t24 role on the frozen
@@ -144,7 +122,7 @@ object ClassifierStore {
     * arrival-token-scale ⋈ vocab — never a corpus pass. */
   def staleness(spark: SparkSession, arrivals: DataFrame,
                 name: String): DataFrame = {
-    val (gen, batches) = livePtr(spark, name)
+    val (gen, batches) = FreezeStore.live(spark, name)
     // ONE pass over the arrivals (round-15 review fix: the first cut
     // tokenized them three times for one monitor row): frozenScores
     // now emits a row for EVERY doc, so the doc count, the token
@@ -156,8 +134,8 @@ object ClassifierStore {
     // 1-row stats baseline) come off that generation — wholly one
     // generation even for a standalone monitor call.
     val scored = graft.operators.Quality.frozenScores(arrivals,
-        part(spark, name, gen, batches, "vocab"),
-        part(spark, name, gen, batches, "weights"))
+        FreezeStore.part(spark, name, gen, batches, "vocab"),
+        FreezeStore.part(spark, name, gen, batches, "weights"))
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(when(col("n_tokens_seen") > 0, 1L)), lit(0L))
           .as("n_docs_scored"),
@@ -172,7 +150,7 @@ object ClassifierStore {
     // TokenizerStore.stalenessWithBase got this exact fix in r17).
     // The returned frame's corpus operands are literals: arrival-only
     // lineage, decoupled from later retain prunes.
-    val b = part(spark, name, gen, batches, "stats")
+    val b = FreezeStore.part(spark, name, gen, batches, "stats")
       .select(col("n_docs"), col("sum_score")).head()
     val (cDocs, cScore) = (b.getLong(0), b.getLong(1))
     scored
@@ -222,12 +200,4 @@ object ClassifierStore {
           name, buckets, retain))
       }
     }
-
-  /** The live generation number (audit hooks). */
-  def liveGen(spark: SparkSession, name: String): Option[Long] =
-    FreezeStore.readPtr(spark, name).map(_._1)
-
-  /** Drop the whole family — pointer and every generation. */
-  def drop(spark: SparkSession, name: String): Unit =
-    FreezeStore.dropAll(spark, name)
 }

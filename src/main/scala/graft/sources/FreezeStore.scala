@@ -389,7 +389,7 @@ object FreezeStore {
   }
 
   // families whose lease THIS THREAD currently holds — makes
-  // withLease reentrant, so a multi-step sequence (append's
+  // withFamilyLease reentrant, so a multi-step sequence (append's
   // reserve/commit, a store's compact) can hold ONE lease across
   // nested pointer ops without self-deadlock. LOCK ORDER (ADVICE
   // r12): the lease is always acquired BEFORE the per-name JVM lock
@@ -415,15 +415,29 @@ object FreezeStore {
   }
 
   /** Run `body` holding the family's CROSS-PROCESS commit lease
-    * (see [[FreezeLease]]); stale/wait knobs are runtime confs so a
-    * deployment (or a spec) can tune them per-session. Reentrant per
-    * thread (the outer hold's heartbeat keeps pumping); a FRESH hold
-    * starts a daemon heartbeat thread for its whole duration (ADVICE
-    * r12: without it, any hold longer than staleMs — a staging write
-    * under load, a compaction rewrite — invited a stale-break of a
-    * live writer). */
-  private[sources] def withLease[A](spark: SparkSession, name: String)
-                                   (body: => A): A =
+    * (see [[FreezeLease]]) — the one lease entry point, for this
+    * module's pointer ops, every store's freeze/refreeze/compact
+    * sequence and operators outside this package
+    * (Similarity.refreezeIfStale). Every read-modify-write sequence —
+    * [[commit]]'s gen = readPtr+1 → bulk write → flip, a refreeze's
+    * corpus read → union → freeze, a compact's rewrite window (VERDICT
+    * r12 #4: a concurrent append's reserve then blocks at the lease
+    * instead of landing data mid-rewrite) — must run under ONE hold,
+    * or two concurrent freezers pick the same generation / a committed
+    * append landing mid-refreeze is silently dropped from the new
+    * generation (ADVICE r13).
+    *
+    * REENTRANT per thread: a nested hold (a refreeze's nested freeze,
+    * the flipPtr inside a commit) runs free and the outer hold owns
+    * release. Stale/wait knobs are runtime confs so a deployment (or a
+    * spec) can tune them per-session. A FRESH hold starts a daemon
+    * heartbeat thread for its whole duration (ADVICE r12: without it,
+    * any hold longer than staleMs — a staging write under load, a
+    * compaction rewrite — invited a stale-break of a live writer).
+    * LOCK ORDER: the lease is always acquired BEFORE the per-name JVM
+    * lock ([[withFamilyLock]]) and never while holding it. */
+  def withFamilyLease[A](spark: SparkSession, name: String)
+                        (body: => A): A =
     heldLease(name) match {
       case Some(_) => body // reentrant: the outer hold owns release
       case None =>
@@ -461,28 +475,6 @@ object FreezeStore {
           l.release()
         }
     }
-
-  /** Run `body` under the family's cross-process lease — the stores'
-    * compaction entry point (VERDICT r12 #4): holding the lease for
-    * the whole compact window turns the QUIESCED-WRITER convention
-    * into an enforced contract — a concurrent append's reserve (or a
-    * re-freeze's flip) blocks at the lease until the compact
-    * finishes, or fails loudly at its wait deadline naming this
-    * holder; it can no longer land data mid-rewrite and have it
-    * silently vacuumed as an orphan. The heartbeat thread keeps the
-    * hold alive across rewrites longer than staleMs.
-    *
-    * PUBLIC (ADVICE r13): every store's read-modify-write sequence —
-    * freeze's gen = readPtr+1 → bulk write → flip, refreezeIfStale's
-    * corpus read → union → freeze — must run under ONE hold, or two
-    * concurrent freezers pick the same generation / a committed
-    * append landing mid-refreeze is silently dropped from the new
-    * generation. Reentrant per thread, so the wrapped freeze's own
-    * flipPtr nests free. Operators outside this package
-    * (Similarity.refreezeIfStale) take it through here. */
-  def withFamilyLease[A](spark: SparkSession, name: String)
-                        (body: => A): A =
-    withLease(spark, name)(body)
 
   /** The heal itself — callers hold BOTH the JVM lock and the
     * cross-process lease. Re-checks every condition under the lease,
@@ -553,10 +545,10 @@ object FreezeStore {
     * re-checks and finds nothing to heal) or fails loudly at the
     * wait deadline. A healthy family (no `ptr_old`) takes NO lease —
     * the read fast path stays free of file ops. Lease OUTSIDE the
-    * JVM lock (the one lock order, see withLease). */
+    * JVM lock (the one lock order, see withFamilyLease). */
   def recoverPtr(spark: SparkSession, name: String): Unit =
     if (exists(spark, s"${ptr(name)}_old"))
-      withLease(spark, name) {
+      withFamilyLease(spark, name) {
         lockFor(name).synchronized(healUnsafe(spark, name))
       }
 
@@ -626,7 +618,7 @@ object FreezeStore {
     // with this window. Lease OUTSIDE the JVM lock (the one order);
     // the lock then serializes same-process callers and hides the
     // rename window from same-JVM readers.
-    withLease(spark, name) {
+    withFamilyLease(spark, name) {
       lockFor(name).synchronized {
         healUnsafe(spark, name)
         val p = ptr(name)
@@ -690,17 +682,16 @@ object FreezeStore {
     * processes sharing a persistent metastore, not just same-JVM. */
   def appendBatch(spark: SparkSession, name: String)
                  (land: (Long, Long) => Unit): Unit = {
-    val (gen, batch) = withLease(spark, name) {
+    val (gen, batch) = withFamilyLease(spark, name) {
       withFamilyLock(name) {
-        val (g, batches, hwm) = readPtrFull(spark, name).getOrElse(
-          throw new IllegalStateException(s"no frozen family named $name"))
+        val (g, batches, hwm) = readPtrFull(spark, name).getOrElse(throw noFamily(name))
         val b = hwm + 1
         flipPtr(spark, name, g, batches, hwm = b)
         (g, b)
       }
     }
     land(gen, batch)
-    withLease(spark, name) {
+    withFamilyLease(spark, name) {
       withFamilyLock(name) {
         val (g2, cur, h2) = readPtrFull(spark, name).getOrElse(
           throw new IllegalStateException(
@@ -795,8 +786,7 @@ object FreezeStore {
     * drives both orders; AnnShipSpec pins the explicit vacuum). */
   private[sources] def compactGate(spark: SparkSession, name: String,
       vacuumOrphans: Boolean = false): (Long, Seq[Long]) = {
-    val (gen, batches, hwm) = readPtrFull(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen family named $name"))
+    val (gen, batches, hwm) = readPtrFull(spark, name).getOrElse(throw noFamily(name))
     if (hwm > batches.max && !vacuumOrphans)
       throw new IllegalStateException(
         s"compact($name): batch id $hwm is reserved but not committed — " +
@@ -825,17 +815,95 @@ object FreezeStore {
   def genTable(name: String, gen: Long, part: String): String =
     s"${name}_g${gen}_$part"
 
-  /** Every generation number with at least one table in the catalog
-    * — the retention sweep's worklist (one in-memory catalog scan). */
-  def listGens(spark: SparkSession, name: String): Seq[Long] = {
+  /** THE generation lifecycle every frozen family shares: under ONE
+    * family-lease hold, compute the new generation from the live
+    * pointer, run `write(gen)` (the family's own component writes —
+    * each resets and saveAsTables its `genTable(name, gen, _)` parts,
+    * stamped `gen`), COMMIT with one pointer flip to `Seq(0L)`, then
+    * retire every generation past the retention window. Returns the
+    * committed generation.
+    *
+    * Until the flip nothing `write` landed is reachable — a crash
+    * before it leaves the new generation's tables orphaned and every
+    * reader on the old generation. Absorb and refreeze paths that read
+    * the live generation before committing keep their read and the
+    * flip in one critical section: the lease is reentrant, so they
+    * wrap their read and this call in one [[withFamilyLease]] hold.
+    *
+    * RETENTION CONTRACT (VERDICT r10): the newest `retain` superseded
+    * generations may still back live readers' plans and are kept — a
+    * plan bound to generation N survives exactly `retain` subsequent
+    * commits; the (retain+1)-th drops N's tables mid-plan. The sweep
+    * drops EVERY catalog table of a retired generation
+    * (`<name>_g<g>_.*` — the [[listGens]]/[[dropAll]] pattern), so
+    * the staging tables a crashed or aborted [[compactTable]] left
+    * behind (`_compacting`, `_precompact`) retire with their
+    * generation, and a `retain` lowered between commits still clears
+    * what the larger window left. */
+  def commit(spark: SparkSession, name: String, retain: Int)
+            (write: Long => Unit): Long = {
+    require(retain >= 1, "retain must keep at least the superseded generation")
+    withFamilyLease(spark, name) {
+      val prev = readPtr(spark, name).map(_._1).getOrElse(0L)
+      val gen = prev + 1
+      write(gen)
+      flipPtr(spark, name, gen, Seq(0L))
+      genTables(spark, name).collect { case (t, g) if g <= prev - retain => t }
+        .foreach(Bucketing.resetTable(spark, _))
+      gen
+    }
+  }
+
+  private def noFamily(name: String) =
+    new IllegalStateException(s"no frozen family named $name")
+
+  /** The live (generation, committed batch ids) — throws naming the
+    * family before its first freeze. */
+  def live(spark: SparkSession, name: String): (Long, Seq[Long]) =
+    readPtr(spark, name).getOrElse(throw noFamily(name))
+
+  /** One component of generation `gen`, filtered to the committed
+    * `batches` (a half-landed append is invisible; the filter is a
+    * pushed parquet predicate over the tiny batch column) with the
+    * bookkeeping columns dropped. Components written without a batch
+    * column — never appended to: the ANN quantizer tables, the Dedup
+    * screens — come back whole. */
+  def part(spark: SparkSession, name: String, gen: Long, batches: Seq[Long],
+           p: String): org.apache.spark.sql.DataFrame = {
+    val t = spark.table(genTable(name, gen, p))
+    (if (t.columns.contains("batch"))
+      t.filter(org.apache.spark.sql.functions.col("batch").isin(batches: _*))
+    else t).drop("batch", "gen")
+  }
+
+  /** A bucketed component's bucket count, read back from the catalog
+    * — appends and compaction re-use it (a mismatched spec would
+    * silently land unbucketed files), never assume it. */
+  def bucketsOf(spark: SparkSession, table: String): Int =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
+      .getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
+
+  /** Every generation-component table of the family in the catalog,
+    * with its generation (one in-memory catalog scan). The catalog
+    * stores names lower-cased unless spark.sql.caseSensitive is set,
+    * so the family name is matched in the form the catalog stores. */
+  private def genTables(spark: SparkSession, name: String): Seq[(String, Long)] = {
+    val stored =
+      if (spark.sessionState.conf.caseSensitiveAnalysis) name
+      else name.toLowerCase(java.util.Locale.ROOT)
     val genRe = java.util.regex.Pattern.compile(
-      java.util.regex.Pattern.quote(name) + "_g(\\d+)_.*")
+      java.util.regex.Pattern.quote(stored) + "_g(\\d+)_.*")
     spark.sessionState.catalog.listTables("default")
       .map(_.table).flatMap { t =>
         val m = genRe.matcher(t)
-        if (m.matches()) Some(m.group(1).toLong) else None
-      }.distinct.sorted
+        if (m.matches()) Some((t, m.group(1).toLong)) else None
+      }
   }
+
+  /** Every generation number with at least one table in the catalog. */
+  def listGens(spark: SparkSession, name: String): Seq[Long] =
+    genTables(spark, name).map(_._2).distinct.sorted
 
   /** Drop every table of the family — pointer (and its in-flight
     * temps) plus ALL generations found in the catalog (test hygiene /
@@ -843,10 +911,6 @@ object FreezeStore {
   def dropAll(spark: SparkSession, name: String): Unit = {
     val p = ptr(name)
     Seq(p, s"${p}_new", s"${p}_old").foreach(Bucketing.resetTable(spark, _))
-    val genRe = java.util.regex.Pattern.compile(
-      java.util.regex.Pattern.quote(name) + "_g\\d+_.*")
-    spark.sessionState.catalog.listTables("default")
-      .map(_.table).filter(t => genRe.matcher(t).matches())
-      .foreach(Bucketing.resetTable(spark, _))
+    genTables(spark, name).foreach { case (t, _) => Bucketing.resetTable(spark, t) }
   }
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import FreezeStore.genTable
+
 /** The FROZEN CO-PURCHASE EDGE INDEX — the graph family's member of
   * the frozen-index lattice (dense ANN: [[AnnIndexStore]]; perceptual
   * media: [[MediaIndexStore]]; sparse text: [[Bm25IndexStore]]).
@@ -34,9 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphIndexStore {
 
-  private def gt(name: String, gen: Long): String =
-    FreezeStore.genTable(name, gen, "edges")
-
   /** The persisted edge columns: (x, y) always; a weighted frame
     * (g07's re-rank corpus) also carries `w` — probes and the drift
     * monitor ignore it, the PageRank re-derivation reads it. */
@@ -46,37 +45,22 @@ object GraphIndexStore {
 
   /** Freeze a canonical (x < y) edge frame as the new live
     * generation (optionally weighted — see [[edgeCols]]). Returns
-    * the committed generation. The WHOLE readPtr → writeBucketed →
-    * flipPtr sequence holds the family lease (ADVICE r13: gen =
-    * readPtr+1 computed outside it let two concurrent freezers pick
-    * the same generation, race the same gen table, and
-    * last-flip-wins over possibly mixed contents). */
+    * the committed generation; the write is one
+    * [[FreezeStore.commit]] body. */
   def freeze(edges: DataFrame, name: String, buckets: Int = 8,
-             retain: Int = 1): Long = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
-    val spark = edges.sparkSession
-    FreezeStore.withFamilyLease(spark, name) {
-      val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-      val gen = prev + 1
+             retain: Int = 1): Long =
+    FreezeStore.commit(edges.sparkSession, name, retain) { gen =>
       Bucketing.writeBucketed(
         edges.select(edgeCols(edges): _*)
           .withColumn("batch", lit(0L)).withColumn("gen", lit(gen)),
-        gt(name, gen), "x", buckets)
-      FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-      FreezeStore.listGens(spark, name)
-        .filter(g => g < gen && g > 0 && g <= prev - retain)
-        .foreach(g => Bucketing.resetTable(spark, gt(name, g)))
-      gen
+        genTable(name, gen, "edges"), "x", buckets)
     }
-  }
 
   /** The live generation's COMMITTED edges (pointer resolved once —
     * a bound plan is wholly one generation). */
   def edges(spark: SparkSession, name: String): DataFrame = {
-    val (gen, batches) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen edge index named $name"))
-    spark.table(gt(name, gen))
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
+    val (gen, batches) = FreezeStore.live(spark, name)
+    FreezeStore.part(spark, name, gen, batches, "edges")
   }
 
   /** Triangles the arriving (x < y)-canonical edges close against the
@@ -103,16 +87,12 @@ object GraphIndexStore {
     * [[refreezeIfStale]] later collapses them physically. */
   def append(newEdges: DataFrame, name: String): Unit = {
     val spark = newEdges.sparkSession
-    def bucketsOf(t: String): Int = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$t is not bucketed"))
     FreezeStore.appendBatch(spark, name) { (gen, batch) =>
-      val t = gt(name, gen)
+      val t = genTable(name, gen, "edges")
       newEdges.select(edgeCols(newEdges): _*)
         .withColumn("batch", lit(batch)).withColumn("gen", lit(gen))
         .write.mode("append").format("parquet")
-        .bucketBy(bucketsOf(t), "x").sortBy("x")
+        .bucketBy(FreezeStore.bucketsOf(spark, t), "x").sortBy("x")
         .saveAsTable(t)
     }
   }
@@ -142,7 +122,7 @@ object GraphIndexStore {
     // append that reserved AND committed between that read and the
     // freeze's flip was silently dropped from the new generation —
     // the lost-update class appendBatch/compact already closed). The
-    // nested freeze's own flipPtr re-enters the same hold.
+    // nested freeze's own commit re-enters the same hold.
     FreezeStore.withFamilyLease(spark, name) {
     val corp = edges(spark, name)
     val corpNodes = corp.select(col("x").as("u"))
@@ -187,12 +167,9 @@ object GraphIndexStore {
               vacuumOrphans: Boolean = false): Unit =
     FreezeStore.withFamilyLease(spark, name) {
       val (gen, batches) = FreezeStore.compactGate(spark, name, vacuumOrphans)
-      val t = gt(name, gen)
+      val t = genTable(name, gen, "edges")
       FreezeStore.recoverTable(spark, t)
-      val buckets = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-        .bucketSpec.map(_.numBuckets)
-        .getOrElse(throw new IllegalStateException(s"$t is not bucketed"))
+      val buckets = FreezeStore.bucketsOf(spark, t)
       FreezeStore.compactTable(spark, t, batches, (df, staging) =>
         FreezeStore.withForcedBucketedScan(spark) {
           df.write.mode("overwrite").format("parquet")
@@ -217,46 +194,30 @@ object GraphIndexStore {
   def freezeCommunities(pairs: DataFrame, name: String,
                         minWeight: Long =
                           graft.operators.Graph.CommunityMinWeight,
-                        buckets: Int = 8, retain: Int = 1): Long = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
-    val spark = pairs.sparkSession
-    FreezeStore.withFamilyLease(spark, name) {
-      val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-      val gen = prev + 1
+                        buckets: Int = 8, retain: Int = 1): Long =
+    FreezeStore.commit(pairs.sparkSession, name, retain) { gen =>
       def stamp(df: DataFrame): DataFrame =
         df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
       // cached once (round-15 review fix): the bucketed raw write +
       // the contraction's two eager localCheckpoints would otherwise
       // evaluate the (expensive, per-order fan-out) pairs plan 3×
       val p = graft.operators.OpCache.cached(pairs.select("x", "y", "w"))
-      Bucketing.writeBucketed(stamp(p), gt(name, gen), "x", buckets)
+      Bucketing.writeBucketed(stamp(p), genTable(name, gen, "edges"), "x", buckets)
       val labels = graft.operators.Components.starContraction(
         p.filter(col("w") >= minWeight)
           .select(col("x").as("doc_a"), col("y").as("doc_b")))
       Bucketing.writeBucketed(stamp(labels.select("node", "label")),
-        FreezeStore.genTable(name, gen, "labels"), "node", buckets)
-      FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-      FreezeStore.listGens(spark, name)
-        .filter(g => g < gen && g > 0 && g <= prev - retain)
-        .foreach { g =>
-          Bucketing.resetTable(spark, gt(name, g))
-          Bucketing.resetTable(spark, FreezeStore.genTable(name, g, "labels"))
-        }
-      gen
+        genTable(name, gen, "labels"), "node", buckets)
     }
-  }
 
   /** The live generation's committed community labels. Fails loudly
     * on an edge-only family (frozen via [[freeze]] — no labels). */
   def labels(spark: SparkSession, name: String): DataFrame = {
-    val (gen, batches) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen community index named $name"))
-    val t = FreezeStore.genTable(name, gen, "labels")
-    require(spark.catalog.tableExists(t),
+    val (gen, batches) = FreezeStore.live(spark, name)
+    require(spark.catalog.tableExists(genTable(name, gen, "labels")),
       s"frozen family $name carries no community labels — freeze it " +
         "through freezeCommunities, not freeze")
-    spark.table(t)
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
+    FreezeStore.part(spark, name, gen, batches, "labels")
   }
 
   /** g09's monitor served off the SHIPPED labels — the literal
@@ -302,12 +263,4 @@ object GraphIndexStore {
           .groupBy("x", "y").agg(sum(col("w")).as("w")),
         name, minWeight, buckets, retain))
     }
-
-  /** The live generation number (audit hooks). */
-  def liveGen(spark: SparkSession, name: String): Option[Long] =
-    FreezeStore.readPtr(spark, name).map(_._1)
-
-  /** Drop the whole family — pointer and every generation. */
-  def drop(spark: SparkSession, name: String): Unit =
-    FreezeStore.dropAll(spark, name)
 }

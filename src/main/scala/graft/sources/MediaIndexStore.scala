@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import FreezeStore.genTable
+
 /** The FROZEN MEDIA-HASH INDEX — the perceptual-hash corpus shipped
   * once so arriving media match against it WITHOUT re-decoding or
   * re-hashing 100 TB of bytes (the shipIvfpqIndex/shipBloomIndex rule
@@ -39,41 +41,24 @@ object MediaIndexStore {
 
   private val Parts = Seq("hash", "bands")
 
-  private def gt(name: String, gen: Long, part: String): String =
-    FreezeStore.genTable(name, gen, part)
-
   /** Freeze a (doc_id, h_hi, h_lo) corpus hash frame under `name` and
-    * commit atomically. `maxBandOccupancy` > 0 drops hot band buckets
-    * once, here (see class doc). Returns the committed generation. */
+    * commit atomically ([[FreezeStore.commit]]). `maxBandOccupancy` >
+    * 0 drops hot band buckets once, here (see class doc). Returns the
+    * committed generation. */
   def freeze(hashes: DataFrame, name: String, retain: Int = 1,
              maxBandOccupancy: Long = 0L): Long = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
     val spark = hashes.sparkSession
-    // whole readPtr → component writes → flip under ONE family lease
-    // (ADVICE r13: gen assignment outside it let two freezers race
-    // the same generation tables); flipPtr re-enters the hold
-    FreezeStore.withFamilyLease(spark, name) {
-    val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-    val gen = prev + 1
-    def save(df: DataFrame, part: String): Unit = {
-      // orphaned-location guard (see Bucketing.resetTable)
-      Bucketing.resetTable(spark, gt(name, gen, part))
-      df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(gt(name, gen, part))
-    }
-    save(hashes.select(col("doc_id"), col("h_hi"), col("h_lo")), "hash")
-    save(graft.operators.Multimodal.cappedBands(hashes, maxBandOccupancy),
-      "bands")
-    // the COMMIT: until this flip nothing above is reachable
-    FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-    // retire every generation past the retention window (the
-    // AnnIndexStore catalog-sweep rule: a retain lowered between
-    // freezes still clears what the larger window left behind)
-    FreezeStore.listGens(spark, name)
-      .filter(g => g < gen && g > 0 && g <= prev - retain)
-      .foreach(g => Parts.foreach(p => Bucketing.resetTable(spark, gt(name, g, p))))
-    gen
+    FreezeStore.commit(spark, name, retain) { gen =>
+      def save(df: DataFrame, part: String): Unit = {
+        // orphaned-location guard (see Bucketing.resetTable)
+        Bucketing.resetTable(spark, genTable(name, gen, part))
+        df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
+          .write.mode("overwrite").format("parquet")
+          .saveAsTable(genTable(name, gen, part))
+      }
+      save(hashes.select(col("doc_id"), col("h_hi"), col("h_lo")), "hash")
+      save(graft.operators.Multimodal.cappedBands(hashes, maxBandOccupancy),
+        "bands")
     }
   }
 
@@ -87,15 +72,12 @@ object MediaIndexStore {
     * re-binds fresh each trigger (safe at any re-freeze cadence). */
   def matchFrozen(spark: SparkSession, arrivals: DataFrame, name: String,
                   maxHamming: Int = 3): DataFrame = {
-    val (gen, batches) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen media index named $name"))
     // committed batches only — a half-landed append is invisible (the
-    // AnnIndexStore reserve-then-commit contract); the filter is a
-    // pushed parquet predicate over the tiny batch column
-    def part(p: String) = spark.table(gt(name, gen, p))
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
-    graft.operators.Multimodal.matchAgainst(
-      arrivals, part("bands"), part("hash"), maxHamming)
+    // AnnIndexStore reserve-then-commit contract)
+    val (gen, batches) = FreezeStore.live(spark, name)
+    graft.operators.Multimodal.matchAgainst(arrivals,
+      FreezeStore.part(spark, name, gen, batches, "bands"),
+      FreezeStore.part(spark, name, gen, batches, "hash"), maxHamming)
   }
 
   /** APPEND an arriving (doc_id, h_hi, h_lo) batch to the live
@@ -125,7 +107,7 @@ object MediaIndexStore {
       def land(df: DataFrame, part: String): Unit =
         df.withColumn("batch", lit(batch)).withColumn("gen", lit(gen))
           .write.mode("append").format("parquet")
-          .saveAsTable(gt(name, gen, part))
+          .saveAsTable(genTable(name, gen, part))
       land(hashes.select(col("doc_id"), col("h_hi"), col("h_lo")), "hash")
       land(graft.operators.Multimodal.bandRows(hashes), "bands")
     }
@@ -161,10 +143,8 @@ object MediaIndexStore {
     // committed append landing before the flip be silently dropped
     // from the new generation)
     FreezeStore.withFamilyLease(spark, name) {
-    val (gen, batches) = FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen media index named $name"))
-    val corp = spark.table(gt(name, gen, "hash"))
-      .filter(col("batch").isin(batches: _*))
+    val (gen, batches) = FreezeStore.live(spark, name)
+    val corp = FreezeStore.part(spark, name, gen, batches, "hash")
       .select(col("doc_id"), col("h_hi"), col("h_lo"))
     val t = graft.operators.Multimodal.mm12From(arrivals, corp)
       .agg(sum(col("n_arr_hit")).as("hit"), sum(col("n_arr_rows")).as("rows"))
@@ -176,7 +156,6 @@ object MediaIndexStore {
     else Some(freeze(corp.unionByName(arrivals), name, retain, maxBandOccupancy))
   }
 
-  /** The live generation number (staleness / audit hooks). */
   /** COMPACT the live generation after a run of appends (the
     * [[AnnIndexStore.compact]] sibling for the media family): each
     * absorb cycle lands one file set per batch in `hash` and `bands`
@@ -194,17 +173,10 @@ object MediaIndexStore {
     FreezeStore.withFamilyLease(spark, name) {
       val (gen, batches) = FreezeStore.compactGate(spark, name, vacuumOrphans)
       Parts.foreach { p =>
-        FreezeStore.compactTable(spark, gt(name, gen, p), batches,
+        FreezeStore.compactTable(spark, genTable(name, gen, p), batches,
           (df, staging) => df.repartition(files)
             .write.mode("overwrite").format("parquet").saveAsTable(staging))
       }
     }
   }
-
-  def liveGen(spark: SparkSession, name: String): Option[Long] =
-    FreezeStore.readPtr(spark, name).map(_._1)
-
-  /** Drop the whole family — pointer and every generation. */
-  def drop(spark: SparkSession, name: String): Unit =
-    FreezeStore.dropAll(spark, name)
 }

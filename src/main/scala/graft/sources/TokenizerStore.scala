@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import FreezeStore.genTable
+
 /** The FROZEN TRAINED-TOKENIZER ARTIFACT — the merge-table member of
   * the frozen-index lattice (dense ANN: [[AnnIndexStore]]; media:
   * [[MediaIndexStore]]; sparse text: [[Bm25IndexStore]]; graph:
@@ -47,67 +49,42 @@ import org.apache.spark.sql.functions._
   */
 object TokenizerStore {
 
-  private val Parts = Seq("merges", "stats")
-
-  private def gt(name: String, gen: Long, part: String): String =
-    FreezeStore.genTable(name, gen, part)
-
   /** TRAIN the BPE merge table on the given (text) corpus and freeze
     * it as the new live generation. Returns the committed
     * generation. The whole train → component writes → flip sequence
-    * holds the family lease (the ClassifierStore.freeze rule). Cost:
-    * ONE corpus word-frequency groupBy, then `rounds` vocab-scaled
-    * argmax rounds (the t28 plan shape) — nothing re-scans the
-    * corpus after round 0. */
+    * is one [[FreezeStore.commit]]. Cost: ONE corpus word-frequency
+    * groupBy, then `rounds` vocab-scaled argmax rounds (the t28 plan
+    * shape) — nothing re-scans the corpus after round 0. */
   def freeze(docs: DataFrame, name: String,
              rounds: Int = graft.operators.Quality.BpeTrainRounds,
              retain: Int = 1): Long = {
-    require(retain >= 1, "retain must keep at least the superseded generation")
     val spark = docs.sparkSession
     import spark.implicits._
-    FreezeStore.withFamilyLease(spark, name) {
-      val prev = FreezeStore.readPtr(spark, name).map(_._1).getOrElse(0L)
-      val gen = prev + 1
+    FreezeStore.commit(spark, name, retain) { gen =>
       val (curve, tokens0) =
         graft.operators.Quality.trainBpeCurve(docs, rounds)
       def stamp(df: DataFrame): DataFrame =
         df.withColumn("batch", lit(0L)).withColumn("gen", lit(gen))
-      Bucketing.resetTable(spark, gt(name, gen, "merges"))
+      Bucketing.resetTable(spark, genTable(name, gen, "merges"))
       stamp(curve.toDF("merge_round", "pair", "merged_sym", "pair_freq",
           "tokens_after"))
         .coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(gt(name, gen, "merges"))
-      Bucketing.resetTable(spark, gt(name, gen, "stats"))
+        .saveAsTable(genTable(name, gen, "merges"))
+      Bucketing.resetTable(spark, genTable(name, gen, "stats"))
       stamp(Seq((tokens0, curve.last._5, rounds.toLong))
           .toDF("tokens_before", "tokens_after", "n_rounds"))
         .coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(gt(name, gen, "stats"))
-      FreezeStore.flipPtr(spark, name, gen, Seq(0L))
-      FreezeStore.listGens(spark, name)
-        .filter(g => g < gen && g > 0 && g <= prev - retain)
-        .foreach(g => Parts.foreach(p =>
-          Bucketing.resetTable(spark, gt(name, g, p))))
-      gen
+        .saveAsTable(genTable(name, gen, "stats"))
     }
   }
-
-  /** One generation-bound, committed-batch-filtered component. */
-  private def part(spark: SparkSession, name: String, gen: Long,
-                   batches: Seq[Long], p: String): DataFrame =
-    spark.table(gt(name, gen, p))
-      .filter(col("batch").isin(batches: _*)).drop("batch", "gen")
-
-  private def livePtr(spark: SparkSession, name: String): (Long, Seq[Long]) =
-    FreezeStore.readPtr(spark, name).getOrElse(
-      throw new IllegalStateException(s"no frozen tokenizer named $name"))
 
   /** The live generation's ranked merge table as bounded control
     * state — `rounds` (pair, sym) rows in merge order, ready for the
     * one shared literal-replace fold. The pointer resolves ONCE per
     * call (wholly-one-generation). */
   def mergesFrozen(spark: SparkSession, name: String): Seq[(String, String)] = {
-    val (gen, batches) = livePtr(spark, name)
-    part(spark, name, gen, batches, "merges")
+    val (gen, batches) = FreezeStore.live(spark, name)
+    FreezeStore.part(spark, name, gen, batches, "merges")
       .orderBy("merge_round")
       .select("pair", "merged_sym")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -116,8 +93,8 @@ object TokenizerStore {
   /** The stored training curve (t28's output shape) — what a
     * deployment plots next to a t30 calibration sweep. */
   def curveFrozen(spark: SparkSession, name: String): DataFrame = {
-    val (gen, batches) = livePtr(spark, name)
-    part(spark, name, gen, batches, "merges").orderBy("merge_round")
+    val (gen, batches) = FreezeStore.live(spark, name)
+    FreezeStore.part(spark, name, gen, batches, "merges").orderBy("merge_round")
   }
 
   /** SERVE: tokenize a (doc_id, text) frame under the live frozen
@@ -172,12 +149,12 @@ object TokenizerStore {
     // — mixed-generation drift, exactly what wholly-one-generation
     // forbids; harmless under refreezeIfStale's lease but wrong for
     // a standalone monitor call)
-    val (gen, batches) = livePtr(spark, name)
-    val m = part(spark, name, gen, batches, "merges")
+    val (gen, batches) = FreezeStore.live(spark, name)
+    val m = FreezeStore.part(spark, name, gen, batches, "merges")
       .orderBy("merge_round")
       .select("pair", "merged_sym")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val b = part(spark, name, gen, batches, "stats")
+    val b = FreezeStore.part(spark, name, gen, batches, "stats")
       .select("tokens_before", "tokens_after").head()
     val (cBefore, cAfter) = (b.getLong(0), b.getLong(1))
     // the LITERAL t32 mass aggregate (one definition — the
@@ -237,12 +214,4 @@ object TokenizerStore {
           name, rounds, retain))
       }
     }
-
-  /** The live generation number (audit hooks). */
-  def liveGen(spark: SparkSession, name: String): Option[Long] =
-    FreezeStore.readPtr(spark, name).map(_._1)
-
-  /** Drop the whole family — pointer and every generation. */
-  def drop(spark: SparkSession, name: String): Unit =
-    FreezeStore.dropAll(spark, name)
 }

@@ -99,7 +99,7 @@ class AnnShipSpec extends SparkSpec {
         "frozen-index s15 search must equal the in-memory rows")
       assertNoCorpusShuffle("ship_ivfpq",
         Similarity.searchFrozenIvfpq(s2, sf, "ship_ivfpq"))
-    } finally AnnIndexStore.drop(spark, "ship_ivfpq")
+    } finally FreezeStore.dropAll(spark, "ship_ivfpq")
   }
 
   test("bucketed assign/codes: the ADC-shaped join+aggregate plans exchange-free") {
@@ -116,7 +116,7 @@ class AnnShipSpec extends SparkSpec {
         s"bucketed join+agg must not shuffle:\n${physical(frag)}")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      AnnIndexStore.drop(spark, "ship_frag")
+      FreezeStore.dropAll(spark, "ship_frag")
     }
   }
 
@@ -131,7 +131,7 @@ class AnnShipSpec extends SparkSpec {
       assert(got.count() > 0 && got.count() <= 64)
       assert(rows(got) == rows(want),
         "loaded refined centroids must equal the fresh build")
-    } finally AnnIndexStore.drop(spark, "ship_ref")
+    } finally FreezeStore.dropAll(spark, "ship_ref")
   }
 
   test("append routes arrivals through the frozen quantizers; post-append search == in-memory union") {
@@ -221,7 +221,7 @@ class AnnShipSpec extends SparkSpec {
           .flatMap(_.collect { case e: ShuffleExchangeExec => e })
         assert(ex2.isEmpty, "compaction must preserve the bucket layout")
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    } finally AnnIndexStore.drop(spark, "ship_app")
+    } finally FreezeStore.dropAll(spark, "ship_app")
   }
 
   test("RE-FREEZE while a reader is live: wholly-old or wholly-new, never mixed") {
@@ -268,7 +268,7 @@ class AnnShipSpec extends SparkSpec {
       assert(got2 == want2, "a fresh load must see the new generation whole")
       assert(got2 != want1, "the two generations must actually differ " +
         "for this test to prove anything")
-    } finally AnnIndexStore.drop(spark, "ship_live")
+    } finally FreezeStore.dropAll(spark, "ship_live")
   }
 
   test("crash mid-pointer-flip self-heals backward on the next load") {
@@ -284,7 +284,7 @@ class AnnShipSpec extends SparkSpec {
       assert(got == want, "recoverPtr must restore the crashed flip")
       val (_, _, ok) = AnnIndexStore.verifyConsistency(spark, "ship_flip")
       assert(ok)
-    } finally AnnIndexStore.drop(spark, "ship_flip")
+    } finally FreezeStore.dropAll(spark, "ship_flip")
   }
 
   test("crash mid-append: uncommitted batch is invisible; compact vacuums it") {
@@ -360,7 +360,7 @@ class AnnShipSpec extends SparkSpec {
       assert(genR == gen0 && batchesR == batches0) // reservation is metadata-only
       val (_, _, ok2) = AnnIndexStore.verifyConsistency(spark, "ship_half")
       assert(!ok2, "the audit must flag committed codes without assignment")
-    } finally AnnIndexStore.drop(spark, "ship_half")
+    } finally FreezeStore.dropAll(spark, "ship_half")
   }
 
   test("generation-stamp audit detects a hand-mixed freeze") {
@@ -381,7 +381,7 @@ class AnnShipSpec extends SparkSpec {
       foreign.write.format("parquet").saveAsTable(t)
       val (_, _, ok2) = AnnIndexStore.verifyConsistency(spark, "ship_mix")
       assert(!ok2, "a component with a foreign generation stamp must flag")
-    } finally AnnIndexStore.drop(spark, "ship_mix")
+    } finally FreezeStore.dropAll(spark, "ship_mix")
   }
 
   test("post-append search fails loudly when arrivals never landed in embeddings") {
@@ -406,7 +406,7 @@ class AnnShipSpec extends SparkSpec {
         Option(e).toSeq.flatMap(t => Option(t.getMessage).toSeq ++ msgs(t.getCause))
       assert(msgs(ex).exists(_.contains("missing from embeddings")),
         s"expected the coverage guard, got: $ex")
-    } finally AnnIndexStore.drop(spark, "ship_cov")
+    } finally FreezeStore.dropAll(spark, "ship_cov")
   }
 
   test("ship overwrites an orphaned warehouse directory from a dead JVM") {
@@ -423,7 +423,7 @@ class AnnShipSpec extends SparkSpec {
     try {
       Similarity.shipIvfpqIndex(spark, sf, "ship_orphan", buckets = 2)
       assert(Similarity.searchFrozenIvfpq(spark, sf, "ship_orphan").count() > 0)
-    } finally AnnIndexStore.drop(spark, "ship_orphan")
+    } finally FreezeStore.dropAll(spark, "ship_orphan")
     assert(!loc.exists() || loc.listFiles().isEmpty)
   }
 
@@ -446,7 +446,7 @@ class AnnShipSpec extends SparkSpec {
         "compact() must self-heal before rewriting")
       val (na, nc, ok) = AnnIndexStore.verifyConsistency(spark, "ship_crash")
       assert(ok && nc == 4 * na)
-    } finally AnnIndexStore.drop(spark, "ship_crash")
+    } finally FreezeStore.dropAll(spark, "ship_crash")
   }
 
   test("concurrent readPtr during re-freezes: no spurious heal, no torn read") {
@@ -486,7 +486,7 @@ class AnnShipSpec extends SparkSpec {
       assert(errs.isEmpty, s"concurrent reads failed: ${errs.peek()}")
       assert(FreezeStore.readPtr(spark, "ship_race").get._1 == 4L,
         "all three concurrent re-freezes must have committed")
-    } finally AnnIndexStore.drop(spark, "ship_race")
+    } finally FreezeStore.dropAll(spark, "ship_race")
   }
 
   test("generation retention: a bound plan survives exactly `retain` re-freezes") {
@@ -511,7 +511,7 @@ class AnnShipSpec extends SparkSpec {
       assert(!genExists(1L),
         "the second re-freeze must retire generation 1 (retain = 1)")
       assert(genExists(2L) && genExists(3L))
-    } finally AnnIndexStore.drop(spark, "ship_ret")
+    } finally FreezeStore.dropAll(spark, "ship_ret")
   }
 
   test("frozen Bloom screen: a new session's verdicts equal d19; re-freeze is atomic") {
@@ -537,7 +537,7 @@ class AnnShipSpec extends SparkSpec {
       // 2 bits/doc saturates the filter — verdict mass shifts, proving
       // the fresh load took the new generation whole
       assert(refreshed != want, "the re-freeze must be visible to new loads")
-    } finally Dedup.dropBloomIndex(spark, "ship_bloom")
+    } finally FreezeStore.dropAll(spark, "ship_bloom")
   }
 
   test("a corpus filter that holds out every PQ codebook seed fails the ship and names the filter") {
@@ -561,6 +561,6 @@ class AnnShipSpec extends SparkSpec {
       Similarity.shipIvfpqIndex(spark, dir, name, buckets = 2, corpusPred = col("vec_id") % 16 =!= 1)
       assert(Similarity.searchFrozenIvfpq(spark, dir, name, queryPred = col("vec_id") % 16 === 1)
         .count() > 0)
-    } finally AnnIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 }

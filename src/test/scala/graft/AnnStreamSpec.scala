@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import graft.sources.{AnnIndexStore, Tables}
+import graft.sources.{FreezeStore, Tables}
 import graft.streaming.AnnStream
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -50,7 +50,7 @@ class AnnStreamSpec extends SparkSpec {
       val got = results(out)
       assert(got.nonEmpty && got == want,
         s"streamed search != batch frozen search (${got.length} vs ${want.length} rows)")
-    } finally AnnIndexStore.drop(spark, "annstream1")
+    } finally FreezeStore.dropAll(spark, "annstream1")
   }
 
   test("mid-stream re-freeze: each micro-batch is wholly-old or wholly-new") {
@@ -104,7 +104,7 @@ class AnnStreamSpec extends SparkSpec {
         a != wantA
       }, "the re-freeze must actually change chunk-A answers for this " +
         "test to prove anything")
-    } finally AnnIndexStore.drop(spark, "annstream2")
+    } finally FreezeStore.dropAll(spark, "annstream2")
   }
 
   test("streamed hard-negative mining equals batch s21 through a restart") {

@@ -18,7 +18,7 @@ class BloomLifecycleSpec extends SparkSpec {
   private def arrivals = docsAll.filter(col("doc_id") % 10 >= 8)
 
   test("frozen saturation equals the live d22 aggregate") {
-    Dedup.dropBloomIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       Dedup.shipBloomIndex(spark, sf, name)
       val frozen = Dedup.bloomSaturationFrozen(spark, name)
@@ -27,11 +27,11 @@ class BloomLifecycleSpec extends SparkSpec {
         .collect().map(_.toString).toSeq
       assert(frozen.nonEmpty && frozen == live,
         "frozen saturation must equal the oracle-gated live monitor")
-    } finally Dedup.dropBloomIndex(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("absorb merges arrivals under the frozen geometry; the hash guard stops replays") {
-    Dedup.dropBloomIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       Dedup.shipBloomIndex(spark, sf, name)
       val s1 = Dedup.bloomSaturationFrozen(spark, name).head()
@@ -50,11 +50,11 @@ class BloomLifecycleSpec extends SparkSpec {
       assert(Dedup.absorbBloomArrivals(spark, arrivals, name).isEmpty)
       assert(Dedup.bloomSaturationFrozen(spark, name).head()
         .getAs[Long]("bits_set") == s2.getAs[Long]("bits_set"))
-    } finally Dedup.dropBloomIndex(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("saturation trips the geometry rebuild from the hash part alone; dups survive") {
-    Dedup.dropBloomIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       // 2 bits/doc: deliberately saturated at freeze (the qa05 curve's
       // degenerate setting), so the fill gate trips immediately
@@ -82,12 +82,12 @@ class BloomLifecycleSpec extends SparkSpec {
       // relieved filter: nothing trips a second rebuild
       assert(Dedup.refreezeBloomIfSaturated(spark, name,
         maxFill = 0.35).isEmpty)
-    } finally Dedup.dropBloomIndex(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("streaming absorb twin: per-batch absorb + saturation rows, replay-exact state") {
     import spark.implicits._
-    Dedup.dropBloomIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     val base = java.nio.file.Files.createTempDirectory("bloomabs").toString
     try {
       Dedup.shipBloomIndex(spark, sf, name)
@@ -104,6 +104,7 @@ class BloomLifecycleSpec extends SparkSpec {
       // saturation row equals the store's current read
       assert(graft.sources.FreezeStore.readPtr(spark, name)
         .map(_._1).contains(3L))
+      assert(graft.sources.FreezeStore.listGens(spark, name) == Seq(2L, 3L))
       val last = spark.read.parquet(s"$base/out/batch=1")
         .collect().map(_.toString).toSeq
       val now = Dedup.bloomSaturationFrozen(spark, name)
@@ -119,7 +120,7 @@ class BloomLifecycleSpec extends SparkSpec {
       assert(Dedup.d19ScreenFrozen(spark, sf, name)
         .filter(col("outcome") =!= "dup").count() == 0)
     } finally {
-      Dedup.dropBloomIndex(spark, name)
+      graft.sources.FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }

@@ -28,7 +28,7 @@ class FreezeRaceSpec extends SparkSpec {
 
   test("append blocked behind a mid-compact lease fails LOUDLY; nothing vanishes") {
     val name = "race_fam1"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     spark.conf.set("spark.graft.lease.waitMs", "300")
     try {
       Bm25IndexStore.freeze(chunks(Seq(
@@ -61,13 +61,13 @@ class FreezeRaceSpec extends SparkSpec {
         "the retried append must be searchable")
     } finally {
       spark.conf.unset("spark.graft.lease.waitMs")
-      Bm25IndexStore.drop(spark, name)
+      FreezeStore.dropAll(spark, name)
     }
   }
 
   test("append arriving mid-compact BLOCKS until the lease clears, then lands") {
     val name = "race_fam2"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       Bm25IndexStore.freeze(chunks(Seq(
         1L -> Seq("alpha", "beta"))), name, buckets = 2)
@@ -88,12 +88,12 @@ class FreezeRaceSpec extends SparkSpec {
         s"the blocked append must have committed after the hold: $batches")
       assert(Bm25IndexStore.searchFrozen(spark, name, Seq(1 -> Seq("alpha")))
         .select("ck").collect().map(_.getLong(0)).toSet.contains(10L))
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("real compact racing a real append: the append lands; compact succeeds or refuses loudly") {
     val name = "race_fam3"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       Bm25IndexStore.freeze(chunks(Seq(
         1L -> Seq("alpha", "beta"),
@@ -127,12 +127,12 @@ class FreezeRaceSpec extends SparkSpec {
         assert(t.getMessage.contains("reserved but not committed"),
           s"a failed compact must be the loud gate, got: $t")
       }
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("compact refuses a reserved-but-uncommitted id by default; explicit vacuum folds it") {
     val name = "race_fam4"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       Bm25IndexStore.freeze(chunks(Seq(
         1L -> Seq("alpha", "beta"))), name, buckets = 2)
@@ -149,6 +149,6 @@ class FreezeRaceSpec extends SparkSpec {
       Bm25IndexStore.compact(spark, name, vacuumOrphans = true)
       assert(Bm25IndexStore.searchFrozen(spark, name, Seq(1 -> Seq("alpha")))
         .count() == 1, "post-vacuum search serves the committed corpus")
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 }

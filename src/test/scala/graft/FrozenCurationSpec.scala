@@ -80,11 +80,15 @@ class FrozenCurationSpec extends SparkSpec {
           arrivals.select("doc_id", "text"), "p29_near")
         .select("doc_id").collect().map(_.getLong(0)).toSet == nearDups,
         "facade near probe must equal the live band self-join")
+      // two re-freezes of all four artifacts retire generation 1
+      Pipeline.p29Prepare(spark, sf); Pipeline.p29Prepare(spark, sf)
+      Seq("p29_cls", "p29_bloom", "p29_near", "p29_tok").foreach(n =>
+        assert(graft.sources.FreezeStore.listGens(spark, n) == Seq(2L, 3L), n))
     } finally {
-      graft.sources.ClassifierStore.drop(spark, "p29_cls")
-      graft.operators.Dedup.dropBloomIndex(spark, "p29_bloom")
-      graft.operators.Dedup.dropNearDupIndex(spark, "p29_near")
-      graft.sources.TokenizerStore.drop(spark, "p29_tok")
+      graft.sources.FreezeStore.dropAll(spark, "p29_cls")
+      graft.sources.FreezeStore.dropAll(spark, "p29_bloom")
+      graft.sources.FreezeStore.dropAll(spark, "p29_near")
+      graft.sources.FreezeStore.dropAll(spark, "p29_tok")
     }
   }
 }

@@ -188,11 +188,11 @@ class GraftApiSpec extends SparkSpec {
       def msgs(e: Throwable): Seq[String] = Option(e).toSeq
         .flatMap(t => Option(t.getMessage).toSeq ++ msgs(t.getCause))
       assert(msgs(ex).exists(_.contains("missing from embeddings")))
-    } finally graft.sources.AnnIndexStore.drop(spark, "api_ann")
+    } finally graft.sources.FreezeStore.dropAll(spark, "api_ann")
     g.shipBloomFilter("api_bloom")
     try assert(g.screenAgainstFrozenBloom("api_bloom").count() ===
       graft.operators.Dedup.d19BloomScreen(spark, sf).count())
-    finally graft.operators.Dedup.dropBloomIndex(spark, "api_bloom")
+    finally graft.sources.FreezeStore.dropAll(spark, "api_bloom")
   }
 
   test("round-9: streaming wrappers are reachable through the facade") {
@@ -345,7 +345,7 @@ class GraftApiSpec extends SparkSpec {
       assert(g.matchFrozenMedia(hashes, "api_media").count() === 4)
       assert(g.streamingBandCounters(hashes).count() === 4,
         "identical hashes share all four band buckets")
-    } finally graft.sources.MediaIndexStore.drop(g.documents.sparkSession, "api_media")
+    } finally graft.sources.FreezeStore.dropAll(g.documents.sparkSession, "api_media")
   }
 
   test("round-11c decision-support shapes are reachable through the facade") {
@@ -435,7 +435,7 @@ class GraftApiSpec extends SparkSpec {
         r.getAs[String]("regime") -> r.getAs[Double]("unseen_share")).toMap
       assert(byRegime("reverse") > byRegime("inject"),
         s"reversed text must drift harder than one injected token: $byRegime")
-    } finally graft.sources.Bm25IndexStore.drop(ss, name)
+    } finally graft.sources.FreezeStore.dropAll(ss, name)
   }
 
   test("round-13 graph-index family is reachable through the facade") {
@@ -496,7 +496,7 @@ class GraftApiSpec extends SparkSpec {
         "a chunk must never be picked twice")
       assert(mmr.filter(_.getAs[Long]("pick") == 1L)
         .forall(_.getAs[Long]("simmax_micro") == 0L))
-    } finally graft.sources.GraphIndexStore.drop(ss, name)
+    } finally graft.sources.FreezeStore.dropAll(ss, name)
   }
 
   test("round-14 hybrid+classifier family is reachable through the facade") {

@@ -23,7 +23,7 @@ class GraphShipSpec extends SparkSpec {
 
   test("frozen probe equals the live closedByCorpus over the corpus edge set") {
     val name = "graphfr1"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
       val old = Graph.corpusEdgeIndex(spark, sf)
@@ -35,12 +35,12 @@ class GraphShipSpec extends SparkSpec {
       assert(want.nonEmpty, "fixture must close some corpus triangles")
       assert(got == want,
         s"frozen probe != live closedByCorpus (${got.length} vs ${want.length})")
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("append absorbs arrivals: post-append probes close against the grown corpus") {
     val name = "graphfr2"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       // corpus: a triangle-free path 1-2-3; arrivals add 1-3 (closing
       // nothing as corpus YET) plus a hub edge
@@ -56,12 +56,12 @@ class GraphShipSpec extends SparkSpec {
       // probe 2-4: corpus now holds 2-3 and 3-4 → closes through 3
       assert(rows(GraphIndexStore.closedFrozen(spark, edgesDf(Seq(2L -> 4L)), name))
         == Seq("[2,4,3]"), "post-append probes must see the absorbed edges")
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("staleness over the persisted edges equals the live g05 drift core") {
     val name = "graphfr3"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val old = Graph.corpusEdgeIndex(spark, sf)
       val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
@@ -72,19 +72,19 @@ class GraphShipSpec extends SparkSpec {
       val got = rows(GraphIndexStore.staleness(spark, arrivals, name))
       assert(want.nonEmpty && got == want,
         "the frozen staleness read must equal the live banded drift")
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("drift → refreeze: unseen-endpoint share trips it; the new generation absorbs") {
     val name = "graphfr4"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       GraphIndexStore.freeze(edgesDf(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L)),
         name, buckets = 2)
       // in-corpus arrivals: 0/2 unseen endpoints → no trip
       assert(GraphIndexStore.refreezeIfStale(spark, edgesDf(Seq(1L -> 3L)),
         name, maxUnseenShare = 0.2).isEmpty)
-      assert(GraphIndexStore.liveGen(spark, name).contains(1L))
+      assert(FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
       // empty arrivals: a no-op, not a divide-by-zero
       assert(GraphIndexStore.refreezeIfStale(spark,
         edgesDf(Seq(1L -> 2L)).filter(lit(false)), name).isEmpty)
@@ -111,12 +111,12 @@ class GraphShipSpec extends SparkSpec {
         edgesDf(Seq(2L -> 4L)), name)) == before,
         "the refreeze must keep the old corpus whole")
       assert(FreezeStore.listGens(spark, name) == Seq(1L, 2L))
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("refreeze after append of the SAME arrivals: absorbed edges not frozen twice") {
     val name = "graphfr5"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       GraphIndexStore.freeze(edgesDf(Seq(1L -> 2L)), name, buckets = 2)
       val arrivals = edgesDf(Seq(10L -> 11L, 11L -> 12L))
@@ -138,14 +138,14 @@ class GraphShipSpec extends SparkSpec {
       assert(n == 0, "no edge may appear twice after the refreeze")
       assert(GraphIndexStore.edges(spark, name).count() == 5L,
         "gen 2 = {1-2, 10-11, 11-12, 20-21, 21-22} — nothing twice")
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("streaming probe: per-batch closures equal the batch probe; drift rows equal staleness") {
     import spark.implicits._
     val name = "graphfr7"
     val dirBase = java.nio.file.Files.createTempDirectory("graphstream").toString
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       // corpus: path 1-2-3-4 plus 5-6 (so both slices close something)
       GraphIndexStore.freeze(edgesDf(Seq(
@@ -194,14 +194,14 @@ class GraphShipSpec extends SparkSpec {
         .filter(col("band") === -1L).count() > 0,
         "the novel-node slice must land drift mass in the unseen band")
     } finally {
-      GraphIndexStore.drop(spark, name)
+      FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirBase))
     }
   }
 
   test("weighted freeze: w survives the store roundtrip and appends; probes ignore it") {
     val name = "graphfrw1"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val weighted = spark.createDataFrame(Seq(
         (1L, 2L, 3L), (2L, 3L, 5L))).toDF("x", "y", "w")
@@ -217,12 +217,12 @@ class GraphShipSpec extends SparkSpec {
       // the closure probe reads (x, y) only — weights don't disturb it
       assert(rows(GraphIndexStore.closedFrozen(spark,
         edgesDf(Seq(1L -> 3L)), name)) == Seq("[1,3,2]"))
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("weighted drift → refreeze MERGES weights (shared pairs add, novel pairs land)") {
     val name = "graphfrw2"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       GraphIndexStore.freeze(spark.createDataFrame(Seq(
         (1L, 2L, 3L), (2L, 3L, 5L))).toDF("x", "y", "w"), name, buckets = 2)
@@ -246,12 +246,12 @@ class GraphShipSpec extends SparkSpec {
           edgesDf(Seq(20L -> 21L, 21L -> 22L)), name, maxUnseenShare = 0.2)
       }
       assert(thrown.getMessage.contains("weighted"))
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("g07 re-rank equals the storeless twin; merge adds weights on shared pairs") {
     val name = "g07_frozen" // the key's own family name — exercise it
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val got = rows(Graph.g07IncrementalPagerank(spark, sf))
       // the storeless twin: both chains over live-computed weights
@@ -276,7 +276,7 @@ class GraphShipSpec extends SparkSpec {
       val fresh = cwm.join(cwo, Seq("x", "y"), "left_anti").count()
       assert(gained > 0 || fresh > 0,
         "the arrival slice must change the edge weights")
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   // ---- the COMMUNITY view (round 15): freeze labels, serve g09's
@@ -292,7 +292,7 @@ class GraphShipSpec extends SparkSpec {
 
   test("frozen community bridges equal the live bridgeBands; screen respected") {
     val name = "graphcom1"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       GraphIndexStore.freezeCommunities(communityCorpus, name, buckets = 2)
       // labels: only the screened subgraph is labeled
@@ -319,18 +319,18 @@ class GraphShipSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
       assert(frozen == live)
       // an edge-only family refuses the community read loudly
-      GraphIndexStore.drop(spark, "graphcom1e")
+      FreezeStore.dropAll(spark, "graphcom1e")
       GraphIndexStore.freeze(edgesDf(Seq(1L -> 2L)), "graphcom1e", buckets = 2)
       intercept[IllegalArgumentException] {
         GraphIndexStore.communityBridges(spark, arr, "graphcom1e")
       }
-      GraphIndexStore.drop(spark, "graphcom1e")
-    } finally GraphIndexStore.drop(spark, name)
+      FreezeStore.dropAll(spark, "graphcom1e")
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("community refreeze: non-intra share trips it; weight merge crosses the screen") {
     val name = "graphcom2"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       GraphIndexStore.freezeCommunities(communityCorpus, name, buckets = 2)
       // intra-only arrivals: outside share 0 — never a retrain
@@ -339,7 +339,7 @@ class GraphShipSpec extends SparkSpec {
       // empty arrivals: no-op, not a divide-by-zero
       assert(GraphIndexStore.refreezeCommunitiesIfStale(spark,
         wpairs(Seq()).filter(lit(false)), name).isEmpty)
-      assert(GraphIndexStore.liveGen(spark, name).contains(1L))
+      assert(FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
 
       // drifted batch: a second (20,21) observation + novel structure
       // → outside share 1.0 fires the loop; the persisted w=1 and the
@@ -358,12 +358,14 @@ class GraphShipSpec extends SparkSpec {
       val again = GraphIndexStore.communityBridges(spark,
         wpairs(Seq((20L, 21L, 1L))), name).collect()
       assert(again.length == 1 && again(0).getString(0) == "intra")
-    } finally GraphIndexStore.drop(spark, name)
+      GraphIndexStore.freezeCommunities(communityCorpus, name, buckets = 2)
+      assert(FreezeStore.listGens(spark, name) == Seq(2L, 3L))
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("streaming bridges: per-batch bands equal the batch monitor per slice") {
     val name = "graphcom3"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     val base = java.nio.file.Files.createTempDirectory("gbridge").toString
     try {
       GraphIndexStore.freezeCommunities(communityCorpus, name, buckets = 2)
@@ -391,14 +393,14 @@ class GraphShipSpec extends SparkSpec {
         setOf(GraphIndexStore.communityBridges(spark, wpairs(s), name)))
       assert(streamed == want, s"streamed=$streamed want=$want")
     } finally {
-      GraphIndexStore.drop(spark, name)
+      FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }
 
   test("compaction: appended batches collapse, probes unchanged, appends continue") {
     val name = "graphfr6"
-    GraphIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       GraphIndexStore.freeze(edgesDf(Seq(1L -> 2L, 2L -> 3L)), name, buckets = 2)
       GraphIndexStore.append(edgesDf(Seq(1L -> 3L)), name)
@@ -413,6 +415,6 @@ class GraphShipSpec extends SparkSpec {
       assert(rows(GraphIndexStore.closedFrozen(spark,
         edgesDf(Seq(3L -> 5L)), name)) == Seq("[3,5,4]"),
         "post-compaction append must be probe-visible")
-    } finally GraphIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 }

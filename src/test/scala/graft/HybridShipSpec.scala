@@ -41,8 +41,8 @@ class HybridShipSpec extends SparkSpec {
 
   test("frozen hybrid fusion equals the storeless live twin end to end") {
     val (textName, annName) = ("hybridfr_text", "hybridfr_ann")
-    Bm25IndexStore.drop(spark, textName)
-    graft.sources.AnnIndexStore.drop(spark, annName)
+    FreezeStore.dropAll(spark, textName)
+    graft.sources.FreezeStore.dropAll(spark, annName)
     try {
       val got = rows(TextAnalysis.hybridFrozen(spark, sf, textName, annName))
       val want = rows(liveFused())
@@ -50,15 +50,15 @@ class HybridShipSpec extends SparkSpec {
       assert(got == want,
         s"frozen fused != live fused (${got.length} vs ${want.length} rows)")
     } finally {
-      Bm25IndexStore.drop(spark, textName)
-      graft.sources.AnnIndexStore.drop(spark, annName)
+      FreezeStore.dropAll(spark, textName)
+      graft.sources.FreezeStore.dropAll(spark, annName)
     }
   }
 
   test("the fused frame is genuinely hybrid: single-modality and both-modality rows") {
     val (textName, annName) = ("hybridfr2_text", "hybridfr2_ann")
-    Bm25IndexStore.drop(spark, textName)
-    graft.sources.AnnIndexStore.drop(spark, annName)
+    FreezeStore.dropAll(spark, textName)
+    graft.sources.FreezeStore.dropAll(spark, annName)
     try {
       val f = TextAnalysis.hybridFrozen(spark, sf, textName, annName).cache()
       try {
@@ -82,16 +82,16 @@ class HybridShipSpec extends SparkSpec {
           "fused doc_ids must be document ids (ck ≡ doc_id)")
       } finally f.unpersist()
     } finally {
-      Bm25IndexStore.drop(spark, textName)
-      graft.sources.AnnIndexStore.drop(spark, annName)
+      FreezeStore.dropAll(spark, textName)
+      graft.sources.FreezeStore.dropAll(spark, annName)
     }
   }
 
   test("streaming hybrid: per-batch fused rows equal the batch frozen serving path") {
     import spark.implicits._
     val (textName, annName) = ("hybridfr4_text", "hybridfr4_ann")
-    Bm25IndexStore.drop(spark, textName)
-    graft.sources.AnnIndexStore.drop(spark, annName)
+    FreezeStore.dropAll(spark, textName)
+    graft.sources.FreezeStore.dropAll(spark, annName)
     val base = java.nio.file.Files.createTempDirectory("hybridstream").toString
     try {
       // ship both indexes once (the serving precondition)
@@ -128,16 +128,16 @@ class HybridShipSpec extends SparkSpec {
       assert(want.nonEmpty && streamed == want,
         s"streamed hybrid != batch frozen serving (${streamed.length} vs ${want.length})")
     } finally {
-      Bm25IndexStore.drop(spark, textName)
-      graft.sources.AnnIndexStore.drop(spark, annName)
+      FreezeStore.dropAll(spark, textName)
+      graft.sources.FreezeStore.dropAll(spark, annName)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }
 
   test("re-serving reuses the shipped generation: no re-ship on the read path") {
     val (textName, annName) = ("hybridfr3_text", "hybridfr3_ann")
-    Bm25IndexStore.drop(spark, textName)
-    graft.sources.AnnIndexStore.drop(spark, annName)
+    FreezeStore.dropAll(spark, textName)
+    graft.sources.FreezeStore.dropAll(spark, annName)
     try {
       TextAnalysis.hybridFrozen(spark, sf, textName, annName)
       val gen1 = FreezeStore.readPtr(spark, textName).map(_._1)
@@ -148,8 +148,8 @@ class HybridShipSpec extends SparkSpec {
       assert(FreezeStore.readPtr(spark, textName).map(_._1) == gen1,
         "the read path must not advance the text index generation")
     } finally {
-      Bm25IndexStore.drop(spark, textName)
-      graft.sources.AnnIndexStore.drop(spark, annName)
+      FreezeStore.dropAll(spark, textName)
+      graft.sources.FreezeStore.dropAll(spark, annName)
     }
   }
 }

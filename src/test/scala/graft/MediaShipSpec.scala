@@ -29,7 +29,7 @@ class MediaShipSpec extends SparkSpec {
 
   test("frozen match equals the live crossMatch (and the mm11 driver key)") {
     val (arr, corp) = sides()
-    MediaIndexStore.drop(spark, "mediafr1")
+    FreezeStore.dropAll(spark, "mediafr1")
     try {
       MediaIndexStore.freeze(corp, "mediafr1")
       val want = Multimodal.crossMatch(arr, corp)
@@ -41,7 +41,7 @@ class MediaShipSpec extends SparkSpec {
       // and the driver key is exactly this algebra, ordered
       val mm11 = Multimodal.mm11IncrementalMatch(spark, sf).collect().toSeq
       assert(mm11 == want, "mm11 must be the ordered live crossMatch")
-    } finally MediaIndexStore.drop(spark, "mediafr1")
+    } finally FreezeStore.dropAll(spark, "mediafr1")
   }
 
   test("incremental identity: union self-join pairs = corpus pairs + batch pairs + cross matches") {
@@ -77,7 +77,7 @@ class MediaShipSpec extends SparkSpec {
 
   test("re-freeze is wholly-old-or-new and the retention window sweeps") {
     val (arr, corp) = sides()
-    MediaIndexStore.drop(spark, "mediafr2")
+    FreezeStore.dropAll(spark, "mediafr2")
     try {
       MediaIndexStore.freeze(corp, "mediafr2")
       val r1 = MediaIndexStore.matchFrozen(spark, arr, "mediafr2")
@@ -98,14 +98,14 @@ class MediaShipSpec extends SparkSpec {
       assert(FreezeStore.listGens(spark, "mediafr2") == Seq(1L, 2L))
       MediaIndexStore.freeze(corp, "mediafr2")
       assert(FreezeStore.listGens(spark, "mediafr2") == Seq(2L, 3L))
-    } finally MediaIndexStore.drop(spark, "mediafr2")
+    } finally FreezeStore.dropAll(spark, "mediafr2")
   }
 
   test("append is reserve-then-commit: uncommitted invisible, committed == live union") {
     val (arr, corp) = sides()
     val c1 = corp.filter(col("doc_id") % 2 === 0)
     val c2 = corp.filter(col("doc_id") % 2 =!= 0)
-    MediaIndexStore.drop(spark, "mediafr4")
+    FreezeStore.dropAll(spark, "mediafr4")
     try {
       MediaIndexStore.freeze(c1, "mediafr4")
       def matched() = MediaIndexStore.matchFrozen(spark, arr, "mediafr4")
@@ -145,12 +145,12 @@ class MediaShipSpec extends SparkSpec {
         FreezeStore.readPtrFull(spark, "mediafr4").get
       assert(hwmAfter == hwm + 2 && !batchesAfter.contains(hwm + 1),
         "the orphan's id must be burnt, never committed")
-    } finally MediaIndexStore.drop(spark, "mediafr4")
+    } finally FreezeStore.dropAll(spark, "mediafr4")
   }
 
   test("compaction: appended batches collapse to bounded files, matches unchanged, appends continue") {
     val name = "media_compact"
-    MediaIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val (arr, corp) = sides()
       MediaIndexStore.freeze(corp, name)
@@ -182,7 +182,7 @@ class MediaShipSpec extends SparkSpec {
           col("h_hi"), col("h_lo")), name)
       assert(MediaIndexStore.matchFrozen(spark, arr, name).count()
         > before.length, "post-compaction append must be matchable")
-    } finally MediaIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("streaming band counters: two-checkpoint replay equals mm12's arrival buckets") {
@@ -231,7 +231,7 @@ class MediaShipSpec extends SparkSpec {
     val in = Files.createTempDirectory("mediain").toString
     val ckpt = Files.createTempDirectory("mediackpt").toString
     val out = Files.createTempDirectory("mediaout").toString
-    MediaIndexStore.drop(spark, "mediafr3")
+    FreezeStore.dropAll(spark, "mediafr3")
     try {
       MediaIndexStore.freeze(Multimodal.mediaHashes(corpusImgs), "mediafr3")
       def runOnce(): Unit = {
@@ -271,7 +271,7 @@ class MediaShipSpec extends SparkSpec {
         "generation 1 must have answered from the dropped family for " +
           "the boundary to prove anything")
     } finally {
-      MediaIndexStore.drop(spark, "mediafr3")
+      FreezeStore.dropAll(spark, "mediafr3")
       png.unpersist()
     }
   }

@@ -24,7 +24,7 @@ class NearDupShipSpec extends SparkSpec {
     df.collect().map(_.toString).toSeq
 
   test("frozen staleness equals the live d21 aggregate; familiar arrivals are a no-op") {
-    Dedup.dropNearDupIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       Dedup.shipNearDupIndex(spark, sf, name)
       val frozen = rows(Dedup.nearDupStaleness(spark, arrivalsSlice, name))
@@ -37,11 +37,11 @@ class NearDupShipSpec extends SparkSpec {
       assert(familiar.filter(col("hit_share") =!= 1.0).count() == 0)
       assert(Dedup.refreezeNearDupIfStale(spark, corpus, name).isEmpty,
         "familiar arrivals must not trip the refreeze")
-    } finally Dedup.dropNearDupIndex(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("drift -> refreeze merges the arrivals; the members guard stops double absorption") {
-    Dedup.dropNearDupIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       Dedup.shipNearDupIndex(spark, sf, name)
       val nv = novel
@@ -88,12 +88,13 @@ class NearDupShipSpec extends SparkSpec {
       // the superseded generation is retained for bound readers
       assert(spark.table(graft.sources.FreezeStore.genTable(name, 2, "bands"))
         .count() > 0)
-    } finally Dedup.dropNearDupIndex(spark, name)
+      assert(graft.sources.FreezeStore.listGens(spark, name) == Seq(2L, 3L))
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("streaming twins: per-batch rows equal batch probe/staleness across a mid-stream refreeze") {
     import spark.implicits._
-    Dedup.dropNearDupIndex(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     val base = java.nio.file.Files.createTempDirectory("ndstream").toString
     try {
       Dedup.shipNearDupIndex(spark, sf, name)
@@ -136,7 +137,7 @@ class NearDupShipSpec extends SparkSpec {
         .agg(sum("n_corp_buckets")).head().getLong(0)
       assert(c1 > c0, s"batch 1 must read the absorbed generation ($c0 -> $c1)")
     } finally {
-      Dedup.dropNearDupIndex(spark, name)
+      graft.sources.FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }

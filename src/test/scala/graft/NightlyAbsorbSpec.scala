@@ -125,10 +125,10 @@ class NightlyAbsorbSpec extends SparkSpec {
         "the facade's unconditional band absorb must no-op too")
       assert(gen(s"${ns}_bloom") == 2L && gen(s"${ns}_near") == 2L)
     } finally {
-      graft.sources.ClassifierStore.drop(spark, s"${ns}_cls")
-      Dedup.dropBloomIndex(spark, s"${ns}_bloom")
-      Dedup.dropNearDupIndex(spark, s"${ns}_near")
-      graft.sources.TokenizerStore.drop(spark, s"${ns}_tok")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_cls")
+      FreezeStore.dropAll(spark, s"${ns}_bloom")
+      FreezeStore.dropAll(spark, s"${ns}_near")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_tok")
     }
   }
 
@@ -184,10 +184,10 @@ class NightlyAbsorbSpec extends SparkSpec {
         try Pipeline.p30NightlyAbsorb(spark, sf)
           .collect().map(_.toString).sorted
         finally {
-          graft.sources.ClassifierStore.drop(spark, "p30_cls")
-          Dedup.dropBloomIndex(spark, "p30_bloom")
-          Dedup.dropNearDupIndex(spark, "p30_near")
-          graft.sources.TokenizerStore.drop(spark, "p30_tok")
+          graft.sources.FreezeStore.dropAll(spark, "p30_cls")
+          FreezeStore.dropAll(spark, "p30_bloom")
+          FreezeStore.dropAll(spark, "p30_near")
+          graft.sources.FreezeStore.dropAll(spark, "p30_tok")
         }
       assert(got1.toSeq == want1.toSeq,
         "batch 1 must equal the independent two-night key's night-2 rows")
@@ -210,10 +210,10 @@ class NightlyAbsorbSpec extends SparkSpec {
         FreezeStore.readPtr(spark, s"${ns}_near").get._1) == gens,
         "replayed absorbs must be no-ops (no new generations)")
     } finally {
-      graft.sources.ClassifierStore.drop(spark, s"${ns}_cls")
-      Dedup.dropBloomIndex(spark, s"${ns}_bloom")
-      Dedup.dropNearDupIndex(spark, s"${ns}_near")
-      graft.sources.TokenizerStore.drop(spark, s"${ns}_tok")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_cls")
+      FreezeStore.dropAll(spark, s"${ns}_bloom")
+      FreezeStore.dropAll(spark, s"${ns}_near")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_tok")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }
@@ -267,10 +267,10 @@ class NightlyAbsorbSpec extends SparkSpec {
       assert(served.forall(_.getLong(0) % 10 == 9),
         "the post-maintain serve must run against the new generations")
     } finally {
-      graft.sources.ClassifierStore.drop(spark, s"${ns}_cls")
-      Dedup.dropBloomIndex(spark, s"${ns}_bloom")
-      Dedup.dropNearDupIndex(spark, s"${ns}_near")
-      graft.sources.TokenizerStore.drop(spark, s"${ns}_tok")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_cls")
+      FreezeStore.dropAll(spark, s"${ns}_bloom")
+      FreezeStore.dropAll(spark, s"${ns}_near")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_tok")
     }
   }
 
@@ -317,10 +317,10 @@ class NightlyAbsorbSpec extends SparkSpec {
       assert(replay.filter(col("outcome") =!= "dup").count() == 0,
         "recovered admission must screen a survivor replay whole")
     } finally {
-      graft.sources.ClassifierStore.drop(spark, s"${ns}_cls")
-      Dedup.dropBloomIndex(spark, s"${ns}_bloom")
-      Dedup.dropNearDupIndex(spark, s"${ns}_near")
-      graft.sources.TokenizerStore.drop(spark, s"${ns}_tok")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_cls")
+      FreezeStore.dropAll(spark, s"${ns}_bloom")
+      FreezeStore.dropAll(spark, s"${ns}_near")
+      graft.sources.FreezeStore.dropAll(spark, s"${ns}_tok")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }

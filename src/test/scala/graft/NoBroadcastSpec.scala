@@ -83,7 +83,7 @@ class NoBroadcastSpec extends SparkSpec {
         rows(graft.operators.Similarity.searchFrozenIvfpq(spark, sf, "nb_frozen"))
       }
       assert(d == s, "frozen search diverges without broadcast joins")
-    } finally graft.sources.AnnIndexStore.drop(spark, "nb_frozen")
+    } finally graft.sources.FreezeStore.dropAll(spark, "nb_frozen")
   }
 
   // round 11: the media match's band/hash joins are hint-free (the
@@ -103,7 +103,7 @@ class NoBroadcastSpec extends SparkSpec {
 
     val corp = graft.operators.Multimodal.mm09Phash(spark, sf)
       .select("doc_id", "h_hi", "h_lo")
-    graft.sources.MediaIndexStore.drop(spark, "nb_media")
+    graft.sources.FreezeStore.dropAll(spark, "nb_media")
     try {
       graft.sources.MediaIndexStore.freeze(corp, "nb_media")
       val arr = corp.filter(org.apache.spark.sql.functions.col("doc_id") < 20)
@@ -117,7 +117,7 @@ class NoBroadcastSpec extends SparkSpec {
       }
       assert(d.nonEmpty && d == s,
         "frozen media match diverges without broadcast joins")
-    } finally graft.sources.MediaIndexStore.drop(spark, "nb_media")
+    } finally graft.sources.FreezeStore.dropAll(spark, "nb_media")
   }
 
   // round 11c: the new TPC-H shapes' corpus-scale joins are hint-free

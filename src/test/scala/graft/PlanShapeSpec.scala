@@ -78,7 +78,7 @@ class PlanShapeSpec extends SparkSpec {
     // two-column pruned scan + the merge fold inlined in a Project;
     // at 100 TB its cost is exactly the scan
     val name = "ps_tok31"
-    graft.sources.TokenizerStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = graft.sources.Tables.documents(spark, sf)
         .select("doc_id", "text")
@@ -92,7 +92,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(scans.nonEmpty && scans.forall(
         _.requiredSchema.fieldNames.toSet == Set("doc_id", "text")),
         "column pruning must reach the scan")
-    } finally graft.sources.TokenizerStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("p06/t12/mm03: narrow plans — no shuffle before the final sort") {

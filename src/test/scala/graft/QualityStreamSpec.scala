@@ -71,7 +71,7 @@ class QualityStreamSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val name = "qs_frozen_cls"
-    graft.sources.ClassifierStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     val base = Files.createTempDirectory("fclsstream").toString
     try {
       // the shipped TRAINED artifact (t27 pocket run over the corpus)
@@ -97,7 +97,7 @@ class QualityStreamSpec extends SparkSpec {
       assert(want.nonEmpty && streamed == want,
         s"streamed frozen scores != serving read (${streamed.length} vs ${want.length})")
     } finally {
-      graft.sources.ClassifierStore.drop(spark, name)
+      graft.sources.FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }
@@ -107,7 +107,7 @@ class QualityStreamSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val name = "qs_frozen_tok"
-    graft.sources.TokenizerStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     val base = Files.createTempDirectory("ftokstream").toString
     try {
       // the shipped TRAINED merge table (t28 run over the corpus)
@@ -139,7 +139,7 @@ class QualityStreamSpec extends SparkSpec {
         .filter(col("n_bpe_trained") <= 0 || col("n_ws_tokens") <= 0)
         .count() == 0)
     } finally {
-      graft.sources.TokenizerStore.drop(spark, name)
+      graft.sources.FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }
@@ -148,7 +148,7 @@ class QualityStreamSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val name = "qs_drift_cls"
-    graft.sources.ClassifierStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     val base = Files.createTempDirectory("clsdrift").toString
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
@@ -193,7 +193,7 @@ class QualityStreamSpec extends SparkSpec {
       assert(c0 != c1,
         s"per-batch pointer re-bind must surface the gen-2 baseline ($c0 vs $c1)")
     } finally {
-      graft.sources.ClassifierStore.drop(spark, name)
+      graft.sources.FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }
@@ -202,7 +202,7 @@ class QualityStreamSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val name = "qs_drift_tok"
-    graft.sources.TokenizerStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     val base = Files.createTempDirectory("tokdrift").toString
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
@@ -248,7 +248,7 @@ class QualityStreamSpec extends SparkSpec {
         .filter(org.apache.spark.sql.functions.col("tok_before") <= 0L)
         .count() == 0)
     } finally {
-      graft.sources.TokenizerStore.drop(spark, name)
+      graft.sources.FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
   }

@@ -32,28 +32,28 @@ class RefreezeLoopSpec extends SparkSpec {
 
   test("in-distribution arrivals do not trip the refreeze") {
     val name = "refreeze_loop1"
-    MediaIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       MediaIndexStore.freeze(corpus, name)
       assert(MediaIndexStore.refreezeIfStale(spark, familiarArrivals, name,
         minHitShare = 0.5).isEmpty, "hit_share 1.0 must not refreeze")
-      assert(MediaIndexStore.liveGen(spark, name).contains(1L))
+      assert(FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
       // empty arrival batches are a no-op, not a divide-by-zero
       assert(MediaIndexStore.refreezeIfStale(spark,
         novelArrivals.filter(lit(false)), name).isEmpty)
-    } finally MediaIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("drift → refreeze → absorbed arrivals answer as corpus") {
     val name = "refreeze_loop2"
-    MediaIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       MediaIndexStore.freeze(corpus, name)
       // novel content: no band value matches ⟹ hit_share 0 < 0.5
       val fired = MediaIndexStore.refreezeIfStale(spark, novelArrivals, name,
         minHitShare = 0.5)
       assert(fired.contains(2L), s"novel arrivals must trigger gen 2, got $fired")
-      assert(MediaIndexStore.liveGen(spark, name).contains(2L))
+      assert(FreezeStore.readPtr(spark, name).map(_._1).contains(2L))
       // the refreeze absorbed the arrivals: an exact copy of a novel
       // arrival hash now matches it as corpus (hamming 0)
       val probe = novelArrivals.limit(4)
@@ -65,7 +65,7 @@ class RefreezeLoopSpec extends SparkSpec {
       // and the merged population no longer reads as stale
       assert(MediaIndexStore.refreezeIfStale(spark, novelArrivals, name,
         minHitShare = 0.5).isEmpty, "post-refreeze the same content is covered")
-    } finally MediaIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("ANN loop: frozen-centroid drift trips a refreeze; in-distribution does not") {
@@ -89,7 +89,7 @@ class RefreezeLoopSpec extends SparkSpec {
     }
     val name = "refreeze_ann1"
     val corpus = frame(0L until 160L, drifted = false)
-    graft.sources.AnnIndexStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       // freeze gen 1 over the corpus (through the same quantize path
       // refreezeIfStale uses)
@@ -121,18 +121,18 @@ class RefreezeLoopSpec extends SparkSpec {
       // … and the new generation absorbed the arrivals, consistently
       val (na, nc, ok) = graft.sources.AnnIndexStore.verifyConsistency(spark, name)
       assert(na == 200L && ok, s"gen 2 must hold corpus ∪ arrivals consistently ($na, $nc, $ok)")
-    } finally graft.sources.AnnIndexStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("both loops are reachable through the api facade") {
     val g = new graft.api.Graft(spark, sf)
     val name = "refreeze_api1"
-    MediaIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       MediaIndexStore.freeze(corpus, name)
       assert(g.refreezeMediaIfStale(familiarArrivals, name).isEmpty)
       assert(g.refreezeMediaIfStale(novelArrivals, name).contains(2L))
-    } finally MediaIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   // ---- classifier leg (round 15, VERDICT r14 #3): t27 trains, the
@@ -156,11 +156,11 @@ class RefreezeLoopSpec extends SparkSpec {
 
   test("classifier freeze serves exactly the trained pocket decision rule") {
     val name = "refreeze_cls1"
-    graft.sources.ClassifierStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = classifierCorpus
       graft.sources.ClassifierStore.freeze(docs, name)
-      assert(graft.sources.ClassifierStore.liveGen(spark, name).contains(1L))
+      assert(graft.sources.FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
       // re-derive the pocket artifact (deterministic) and sign-check
       val (v, w, _) = graft.operators.Quality.pocketArtifact(spark, docs)
       import spark.implicits._
@@ -172,12 +172,12 @@ class RefreezeLoopSpec extends SparkSpec {
         .select("doc_id", "score", "keep").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       assert(served == expected)
-    } finally graft.sources.ClassifierStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("classifier loop: familiar arrivals no-op; drifted arrivals retrain and re-pin") {
     val name = "refreeze_cls2"
-    graft.sources.ClassifierStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = classifierCorpus
       graft.sources.ClassifierStore.freeze(docs, name)
@@ -188,7 +188,7 @@ class RefreezeLoopSpec extends SparkSpec {
       // empty arrival batches are a no-op, not a divide-by-zero
       assert(graft.sources.ClassifierStore.refreezeIfStale(
         spark, docs, familiar.filter(lit(false)), name).isEmpty)
-      assert(graft.sources.ClassifierStore.liveGen(spark, name).contains(1L))
+      assert(graft.sources.FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
 
       // gen-1 artifact is feature-blind to the reversed arrivals
       val before = graft.sources.ClassifierStore
@@ -203,7 +203,7 @@ class RefreezeLoopSpec extends SparkSpec {
       val fired = graft.sources.ClassifierStore.refreezeIfStale(
         spark, docs, reversedArrivals, name)
       assert(fired.contains(2L), s"drifted arrivals must trigger gen 2, got $fired")
-      assert(graft.sources.ClassifierStore.liveGen(spark, name).contains(2L))
+      assert(graft.sources.FreezeStore.readPtr(spark, name).map(_._1).contains(2L))
 
       // the refrozen gate SEES the drifted content now: every arrival
       // token is in the retrained vocabulary, and the scores moved
@@ -218,12 +218,12 @@ class RefreezeLoopSpec extends SparkSpec {
       // absorbed arrivals no longer read as stale
       assert(graft.sources.ClassifierStore.refreezeIfStale(
         spark, docs, reversedArrivals, name).isEmpty)
-    } finally graft.sources.ClassifierStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("classifier calibration curve is monotone and anchored at the serving gate") {
     val name = "refreeze_cls3"
-    graft.sources.ClassifierStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = classifierCorpus
       graft.sources.ClassifierStore.freeze(docs, name)
@@ -238,13 +238,13 @@ class RefreezeLoopSpec extends SparkSpec {
         .scoreFrozen(spark, docs, name).filter(col("keep")).count()
       assert(keepAtZero == servedKeep,
         "the theta=0 operating point IS the serving gate")
-    } finally graft.sources.ClassifierStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("the classifier loop is reachable through the api facade") {
     val g = new graft.api.Graft(spark, sf)
     val name = "refreeze_cls_api"
-    graft.sources.ClassifierStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = classifierCorpus
       assert(g.freezeClassifier(docs, name) == 1L)
@@ -255,7 +255,7 @@ class RefreezeLoopSpec extends SparkSpec {
       assert(g.refreezeClassifierIfStale(docs, familiar, name).isEmpty)
       assert(g.refreezeClassifierIfStale(docs, reversedArrivals, name)
         .contains(2L))
-    } finally graft.sources.ClassifierStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   // ---- tokenizer leg (round 16, VERDICT r15 #1): t28 trains, the
@@ -288,11 +288,11 @@ class RefreezeLoopSpec extends SparkSpec {
 
   test("tokenizer freeze serves exactly the trained merge fold") {
     val name = "refreeze_tok1"
-    graft.sources.TokenizerStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = tokenizerCorpus
       assert(graft.sources.TokenizerStore.freeze(docs, name) == 1L)
-      assert(graft.sources.TokenizerStore.liveGen(spark, name).contains(1L))
+      assert(graft.sources.FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
       // re-derive the table (training is deterministic) — the frozen
       // rows must be the identical ranked sequence
       val retrained = graft.operators.Quality.trainBpeMerges(spark, docs,
@@ -309,12 +309,12 @@ class RefreezeLoopSpec extends SparkSpec {
         .select("doc_id", "n_bpe_trained")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(served == expected)
-    } finally graft.sources.TokenizerStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("tokenizer loop: familiar arrivals no-op; drifted arrivals retrain and re-pin") {
     val name = "refreeze_tok2"
-    graft.sources.TokenizerStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = tokenizerCorpus
       graft.sources.TokenizerStore.freeze(docs, name)
@@ -327,7 +327,7 @@ class RefreezeLoopSpec extends SparkSpec {
       // empty arrival batches are a no-op, not a divide-by-zero
       assert(graft.sources.TokenizerStore.refreezeIfStale(
         spark, docs, familiar.filter(lit(false)), name).isEmpty)
-      assert(graft.sources.TokenizerStore.liveGen(spark, name).contains(1L))
+      assert(graft.sources.FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
 
       // the frozen rules barely fire on the junk regime: its ratio
       // sits near 1 while the corpus compressed well under them
@@ -340,7 +340,7 @@ class RefreezeLoopSpec extends SparkSpec {
       val fired = graft.sources.TokenizerStore.refreezeIfStale(
         spark, docs, junkArrivals, name)
       assert(fired.contains(2L), s"drifted arrivals must trigger gen 2, got $fired")
-      assert(graft.sources.TokenizerStore.liveGen(spark, name).contains(2L))
+      assert(graft.sources.FreezeStore.readPtr(spark, name).map(_._1).contains(2L))
 
       // the retrained table absorbed the junk pairs: the arrivals now
       // compress below 1 under the live rules and read fresh
@@ -352,13 +352,13 @@ class RefreezeLoopSpec extends SparkSpec {
       assert(graft.sources.TokenizerStore.refreezeIfStale(
         spark, docs, junkArrivals, name).isEmpty,
         "absorbed arrivals must no longer trip the loop")
-    } finally graft.sources.TokenizerStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("the tokenizer loop is reachable through the api facade") {
     val g = new graft.api.Graft(spark, sf)
     val name = "refreeze_tok_api"
-    graft.sources.TokenizerStore.drop(spark, name)
+    graft.sources.FreezeStore.dropAll(spark, name)
     try {
       val docs = tokenizerCorpus
       assert(g.freezeTokenizer(docs, name) == 1L)
@@ -369,12 +369,12 @@ class RefreezeLoopSpec extends SparkSpec {
       assert(g.refreezeTokenizerIfStale(docs, familiar, name).isEmpty)
       assert(g.refreezeTokenizerIfStale(docs, junkArrivals, name)
         .contains(2L))
-    } finally graft.sources.TokenizerStore.drop(spark, name)
+    } finally graft.sources.FreezeStore.dropAll(spark, name)
   }
 
   test("a reader bound before the automated flip survives it (retention)") {
     val name = "refreeze_loop3"
-    MediaIndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       MediaIndexStore.freeze(corpus, name, retain = 1)
       val probe = corpus.limit(8)
@@ -401,6 +401,6 @@ class RefreezeLoopSpec extends SparkSpec {
       assert(MediaIndexStore.matchFrozen(spark, novelProbe, name).count() > 0)
       assert(FreezeStore.listGens(spark, name) == Seq(1L, 2L),
         "retain=1 keeps exactly the superseded generation")
-    } finally MediaIndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 }

@@ -20,7 +20,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("frozen search equals the live p21 ranking core") {
     val name = "textfr1"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val cf = Pipeline.chunkFrame(Tables.documents(spark, sf))
       Bm25IndexStore.freeze(cf, name)
@@ -30,12 +30,12 @@ class TextIndexSpec extends SparkSpec {
       assert(live.nonEmpty, "fixture must rank something")
       assert(frozen == live,
         s"frozen search != live ranking (${frozen.length} vs ${live.length})")
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("frozen-IDF append: known terms searchable, unseen terms invisible, staleness reads the gap") {
     val name = "textfr2"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       Bm25IndexStore.freeze(chunks(Seq(
         1L -> Seq("alpha", "beta", "beta"),
@@ -65,12 +65,12 @@ class TextIndexSpec extends SparkSpec {
       assert(st.getAs[Long]("n_postings") == 4L &&
         st.getAs[Long]("n_unseen") == 3L,
         s"staleness must count unseen postings: $st")
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("frozen staleness equals the live t20 drift algebra over the same frames") {
     val name = "textfr5"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val cf = Pipeline.chunkFrame(Tables.documents(spark, sf))
       Bm25IndexStore.freeze(cf, name)
@@ -88,12 +88,12 @@ class TextIndexSpec extends SparkSpec {
         .collect().toSeq
       assert(live.nonEmpty && frozen == live,
         s"frozen staleness must equal the live drift row: $frozen vs $live")
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("drift → refreeze: unseen share trips it; the new generation retrieves new terms") {
     val name = "textfr3"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       Bm25IndexStore.freeze(chunks(Seq(
         1L -> Seq("alpha", "beta"),
@@ -102,7 +102,7 @@ class TextIndexSpec extends SparkSpec {
       assert(Bm25IndexStore.refreezeIfStale(spark,
         chunks(Seq(20L -> Seq("alpha", "beta"))), name,
         maxUnseenShare = 0.2).isEmpty)
-      assert(Bm25IndexStore.liveGen(spark, name).contains(1L))
+      assert(FreezeStore.readPtr(spark, name).map(_._1).contains(1L))
 
       // bind a reader to generation 1
       val bound = Bm25IndexStore.searchFrozen(spark, name, Seq(1 -> Seq("alpha")))
@@ -127,7 +127,7 @@ class TextIndexSpec extends SparkSpec {
       assert(alphaHits == Set(1L, 2L),
         s"refreeze must preserve the frozen corpus: $alphaHits")
       assert(FreezeStore.listGens(spark, name) == Seq(1L, 2L))
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("refreeze after append of the SAME arrivals: absorbed chunks are not frozen twice") {
@@ -139,8 +139,8 @@ class TextIndexSpec extends SparkSpec {
     // makes the double-submission idempotent.
     val name = "textfr9"
     val ref = "textfr9_ref"
-    Bm25IndexStore.drop(spark, name)
-    Bm25IndexStore.drop(spark, ref)
+    FreezeStore.dropAll(spark, name)
+    FreezeStore.dropAll(spark, ref)
     try {
       val corpus = chunks(Seq(
         1L -> Seq("alpha", "beta"),
@@ -164,14 +164,14 @@ class TextIndexSpec extends SparkSpec {
         s"double-submitted arrivals must freeze once (${got.length} rows vs " +
           s"${want.length}); scores diverge when tf doubles")
     } finally {
-      Bm25IndexStore.drop(spark, name)
-      Bm25IndexStore.drop(spark, ref)
+      FreezeStore.dropAll(spark, name)
+      FreezeStore.dropAll(spark, ref)
     }
   }
 
   test("freeze → append → searchFrozen equals the oracle-gated p22 incremental key") {
     val name = "textfr8"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val docs = Tables.documents(spark, sf)
         .select(col("doc_id"), col("text"))
@@ -189,12 +189,12 @@ class TextIndexSpec extends SparkSpec {
       // vacuously true
       assert(live.exists(_.getLong(2) >= 1000000L * 1048576L),
         "fixture must surface an arrival chunk in some top-10")
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("compaction: appended batches collapse to sorted buckets, search rows unchanged, appends continue") {
     val name = "textfr6"
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       Bm25IndexStore.freeze(chunks(Seq(
         1L -> Seq("alpha", "beta"),
@@ -226,14 +226,14 @@ class TextIndexSpec extends SparkSpec {
       assert(Bm25IndexStore.searchFrozen(spark, name,
         Seq(1 -> Seq("alpha"))).select("ck").collect().map(_.getLong(0)).toSet
         .contains(12L), "post-compaction append must be searchable")
-    } finally Bm25IndexStore.drop(spark, name)
+    } finally FreezeStore.dropAll(spark, name)
   }
 
   test("streaming drift: per-micro-batch staleness equals the batch read over the same arrivals") {
     import spark.implicits._
     val name = "textfr7"
     val dirBase = java.nio.file.Files.createTempDirectory("bm25drift").toString
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val docs = Tables.documents(spark, sf)
       Bm25IndexStore.freeze(Pipeline.chunkFrame(docs), name)
@@ -274,7 +274,7 @@ class TextIndexSpec extends SparkSpec {
       assert(shares.head == 0.0 && shares.last == 1.0,
         s"regimes must bracket the drift signal: ${shares.toSeq}")
     } finally {
-      Bm25IndexStore.drop(spark, name)
+      FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirBase))
     }
   }
@@ -283,7 +283,7 @@ class TextIndexSpec extends SparkSpec {
     import spark.implicits._
     val name = "textfr4"
     val dirBase = java.nio.file.Files.createTempDirectory("bm25stream").toString
-    Bm25IndexStore.drop(spark, name)
+    FreezeStore.dropAll(spark, name)
     try {
       val cf = Pipeline.chunkFrame(Tables.documents(spark, sf))
       Bm25IndexStore.freeze(cf, name)
@@ -306,7 +306,7 @@ class TextIndexSpec extends SparkSpec {
       assert(streamed.nonEmpty && streamed == batch,
         s"streamed ranking must equal batch (${streamed.length} vs ${batch.length})")
     } finally {
-      Bm25IndexStore.drop(spark, name)
+      FreezeStore.dropAll(spark, name)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirBase))
     }
   }

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Consolidate the serving-latency ops cards into ONE per-round
 artifact (VERDICT r15 #6): the five latency mains (daemon, sparse
-BM25, hybrid, classifier, tokenizer — graft.TokenizerLatency) each
-print a single JSON line, but as separate runs their numbers were
+BM25, hybrid, classifier, tokenizer — graft.DaemonLatency and the
+four cards of graft.LatencyCard) each print a single JSON line, but as separate runs their numbers were
 only comparable by reading PLANS prose. This runs them sequentially
 (one sbt/Spark at a time — a concurrent run would contaminate the
 very latencies being measured), collects each card line, and writes
@@ -22,13 +22,13 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# card key -> (main class, the "metric" its JSON line carries)
+# card key -> (main class and arguments, the "metric" its JSON line carries)
 CARDS = {
     "daemon": ("graft.DaemonLatency", "daemon_latency"),
-    "bm25": ("graft.Bm25Latency", "bm25_latency"),
-    "hybrid": ("graft.HybridLatency", "hybrid_latency"),
-    "classifier": ("graft.ClassifierLatency", "classifier_latency"),
-    "tokenizer": ("graft.TokenizerLatency", "tokenizer_latency"),
+    "bm25": ("graft.LatencyCard bm25", "bm25_latency"),
+    "hybrid": ("graft.LatencyCard hybrid", "hybrid_latency"),
+    "classifier": ("graft.LatencyCard classifier", "classifier_latency"),
+    "tokenizer": ("graft.LatencyCard tokenizer", "tokenizer_latency"),
 }
 
 
