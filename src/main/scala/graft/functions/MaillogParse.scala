@@ -1,9 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
-/** Postfix maillog field extractors, as codegen'd Column expressions.
+/** Postfix maillog field patterns. The header pattern is applied by
+  * [[graft.sources.Maillog.parsed]], which also turns the header's
+  * timestamp into `log_timestamp` (Postfix omits the year;
+  * maillog2db.go:444 injects the current one, graft takes it as a
+  * parameter for determinism). The branch patterns are applied by the
+  * one projection per table in [[graft.operators.MaillogOps]] and
+  * `graft.streaming.MaillogDaemon.deliveryRows`.
   *
   * The patterns re-express the reference's parse cascade
   * (/root/reference/maillog2db.go:44-59) and stay within the regex
@@ -36,11 +39,4 @@ object MaillogParse {
   val QmgrRe: String =
     "^([a-zA-Z0-9]+):\\sfrom=(.*?),\\ssize=([0-9]+),\\snrcpt=([0-9]+)\\s(.*)$"
   val CleanupRe: String = "^([a-zA-Z0-9]+):\\smessage-id=(.*)$"
-
-  /** Postfix timestamps carry no year (maillog2db.go:444 injects the
-    * current year); graft takes it as a parameter for determinism.
-    * The live header parse is [[graft.sources.Maillog.parsed]] (one
-    * regex pass via RegexpExtractGroups). */
-  def pfTimestamp(tsStr: Column, year: Int): Column =
-    to_timestamp(concat(lit(s"$year "), tsStr), "yyyy MMM dd HH:mm:ss")
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.MaillogParse._
+import graft.plans.RegexpExtractGroups.regexpGroups
 import graft.sources.Maillog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -98,15 +99,28 @@ object MaillogOps {
       .orderBy("log_timestamp", "log_mailhost", "log_process",
                "log_processid", "log_message")
 
-  /** Batch client upsert from any parsed-line frame (shared by m02
-    * and the library's batch log replay). */
-  def clientsFrom(p: DataFrame): DataFrame = {
-    import graft.plans.RegexpExtractGroups.regexpGroups
+  /** The capture groups of branch regex `re` over `log_message`,
+    * null where it does not match: one execution yields all groups
+    * at once. `marker` is a substring every match contains ("from="
+    * must appear for QmgrRe to match — markers omit the separator,
+    * which the regex allows to be any \s), so the expensive regex
+    * runs only on candidate lines, semantics intact. */
+  private[graft] def branchGroups(marker: String, re: String): Column = {
     val msg = col("log_message")
-    // two regex passes per candidate line (smtpd parse + client-string
-    // split), matching the streaming projection (MaillogDaemon)
-    p.select(col("log_timestamp"),
-        when(instr(msg, "client=") > 0, regexpGroups(msg, SmtpdRe)).as("g"))
+    when(instr(msg, marker) > 0, regexpGroups(msg, re))
+  }
+
+  // the smtpd parse: the client and the message projections both read it
+  private def smtpdGroups: Column = branchGroups("client=", SmtpdRe)
+
+  /** The smtpd parse and client split: one row per `client=` line,
+    * (log_timestamp, client, client_rdns, client_addr). The ONE
+    * client projection — [[clientsFrom]] groups it, the daemon's
+    * [[graft.streaming.MaillogDaemon.clientUpdates]] upserts it. Two
+    * regex passes per candidate line (smtpd parse + client-string
+    * split) instead of rlike + one pass per capture group. */
+  private[graft] def clientLines(p: DataFrame): DataFrame =
+    p.select(col("log_timestamp"), smtpdGroups.as("g"))
       .filter(col("g").isNotNull)
       .withColumn("cs", regexpGroups(col("g").getItem(2), ClientSplitRe))
       .select(
@@ -114,10 +128,14 @@ object MaillogOps {
         coalesce(col("cs").getItem(0), lit("")).as("client"),
         coalesce(col("cs").getItem(1), lit("")).as("client_rdns"),
         coalesce(col("cs").getItem(2), lit("")).as("client_addr"))
+
+  /** Batch client upsert from any parsed-line frame (shared by m02
+    * and the library's batch log replay). */
+  def clientsFrom(p: DataFrame): DataFrame =
+    clientLines(p)
       .groupBy("client", "client_rdns", "client_addr")
       .agg(max(col("log_timestamp")).as("client_lastseen"),
            count(lit(1)).as("n_seen"))
-  }
 
   /** m02: the `clients` table (upsert → groupBy key + max lastseen). */
   def m02Clients(spark: SparkSession, dir: String): DataFrame =
@@ -136,26 +154,25 @@ object MaillogOps {
   def m03Messages(spark: SparkSession, dir: String): DataFrame =
     messagesFrom(parsedLogs(spark, dir)).orderBy("message_queueid")
 
-  /** Batch merge-by-queueid from any parsed-line frame (shared by m03
-    * and the library's batch log replay). */
-  def messagesFrom(p: DataFrame): DataFrame = {
-    import graft.plans.RegexpExtractGroups.regexpGroups
-    val msg = col("log_message")
-    // substring pre-filters are necessary conditions of each branch
-    // regex ("from=" must appear for QmgrRe to match — markers omit
-    // the separator, which the regex allows to be any \s), so the
-    // expensive regex runs only on candidate lines, semantics intact
-    def gated(marker: String, re: String) =
-      when(instr(msg, marker) > 0, regexpGroups(msg, re))
-    val withG = p.select(
-        col("log_timestamp"), col("log_mailhost"), msg,
-        gated("from=", QmgrRe).as("gq"),
-        gated("client=", SmtpdRe).as("gc"),
-        gated("message-id=", CleanupRe).as("gm"))
+  /** The qmgr/smtpd/cleanup branch frame: every line that one of the
+    * three branch regexes claims, with the branch's capture groups
+    * (`gq`, `gc`, `gm`; null where the branch does not match) and the
+    * queue id (`qid`). The ONE message projection — [[messagesFrom]]
+    * merges it, the daemon's [[graft.streaming.MaillogStream.patches]]
+    * selects its patch fields from it. */
+  private[graft] def branchLines(p: DataFrame): DataFrame =
+    p.select(
+        col("log_timestamp"), col("log_mailhost"), col("log_message"),
+        branchGroups("from=", QmgrRe).as("gq"),
+        smtpdGroups.as("gc"),
+        branchGroups("message-id=", CleanupRe).as("gm"))
       .withColumn("qid", coalesce(col("gq").getItem(1),
         col("gc").getItem(1), col("gm").getItem(1)))
       .filter(col("qid").isNotNull)
 
+  /** Batch merge-by-queueid from any parsed-line frame (shared by m03
+    * and the library's batch log replay). */
+  def messagesFrom(p: DataFrame): DataFrame = {
     // mailhost is part of the tie-break: two hosts can emit an
     // IDENTICAL message text in the same second for one queue id, and
     // without it max_by's winner (hence message_mailhost) would be
@@ -173,7 +190,7 @@ object MaillogOps {
       col("gq").getItem(4).cast("int").as("message_nrcpt"),
       col("gq").getItem(5).as("message_statusext"))
 
-    withG.groupBy("qid")
+    branchLines(p).groupBy("qid")
       .agg(
         max_by(when(col("gq").isNotNull, qmStruct), branchOrd(col("gq"))).as("qm"),
         cnt(col("gq")).as("n_qmgr"),
@@ -189,27 +206,11 @@ object MaillogOps {
         col("n_qmgr"), col("n_smtpd"), col("n_cleanup"))
   }
 
-  private def deliveries(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.RegexpExtractGroups.regexpGroups
-    val p = parsedLogs(spark, dir)
-    val msg = col("log_message")
-    p.select(col("log_timestamp"),
-        when(instr(msg, "to=") > 0, regexpGroups(msg, SmtpRe)).as("g"))
-      .filter(col("g").isNotNull)
-      .select(
-        col("log_timestamp").as("delivery_timestamp"),
-        col("g").getItem(1).as("delivery_queueid"),
-        col("g").getItem(2).as("delivery_to"),
-        col("g").getItem(3).as("delivery_relay"),
-        col("g").getItem(4).as("delivery_delay"),
-        col("g").getItem(5).as("delivery_delays"),
-        col("g").getItem(6).as("delivery_dsn"),
-        col("g").getItem(7).as("delivery_status"),
-        col("g").getItem(8).as("delivery_statusext"))
+  private def deliveries(spark: SparkSession, dir: String): DataFrame =
+    graft.streaming.MaillogDaemon.deliveryRows(parsedLogs(spark, dir))
       .withColumn("delivery_delay_s",
         col("delivery_delay").cast("decimal(18,2)").cast("double"))
       .distinct()
-  }
 
   /** m04: the `deliveries` table (distinct on the full tuple). */
   def m04Deliveries(spark: SparkSession, dir: String): DataFrame =

@@ -16,8 +16,8 @@ import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, SQL
   * races on fresh keys.
   *
   * Schema management (maillog2db.go:163-166 auto-migrates on start;
-  * README: "schema is automatically created"): with `autoCreate`
-  * (default), the first write issues a dialect-aware CREATE TABLE
+  * README: "schema is automatically created"): when the table is
+  * absent, the first write issues a dialect-aware CREATE TABLE
   * carrying the reference's bookkeeping columns (go:61-110) —
   * auto-increment `id`, `row_created_at`, `row_updated_at` — plus
   * `row_key_hash`, a sha-256 of the logical key tuple with a UNIQUE
@@ -54,7 +54,6 @@ import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, SQL
 class JdbcUpsertSink(url: String, table: String, keyCols: Seq[String],
                      user: String, password: String,
                      dialect: String = "mysql",
-                     autoCreate: Boolean = true,
                      createTypes: Map[String, String] = Map.empty,
                      mergePolicy: Map[String, String] = Map.empty)
     extends Serializable {
@@ -203,14 +202,14 @@ class JdbcUpsertSink(url: String, table: String, keyCols: Seq[String],
       finally st.close()
     } catch { case _: SQLException => false }
 
-  /** Create the table if requested and absent, then record whether
+  /** Create the table if absent, then record whether
     * the managed write path applies. Idempotent; races with another
     * creator resolve via the exists re-probe. */
   private def ensureSchema(schema: StructType): Boolean = {
     managedMode.getOrElse {
       val conn = DriverManager.getConnection(url, user, password)
       try {
-        if (autoCreate && !tableExists(conn)) {
+        if (!tableExists(conn)) {
           try {
             val st = conn.createStatement()
             try st.execute(createDdl(schema)) finally st.close()

@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.GraftSession
 import graft.functions.MaillogParse._
+import graft.operators.MaillogOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, ValueState}
 
 /** Drop-in replacement for the reference daemon's CLI
   * (maillog2db.go:115-128): watch a maillog location, keep the four
@@ -18,10 +19,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
   *     -maillog /var/log/maillog-dir -dbhost 10.0.0.1 -dbname maillog2db \
   *     -dbuser u -dbpass p
   *
-  * Four streams share one source scan: logs (append), clients
-  * (stateful upsert by client key), messages (stateful merge by
-  * queueid), deliveries (append); DB-side PRIMARY/UNIQUE keys give
-  * the reference's insert-if-absent semantics on the append tables.
+  * Four streaming queries, one per table: logs (append, deduped
+  * in-stream), clients (stateful upsert by client key), messages
+  * (stateful merge by queueid), deliveries (append); DB-side
+  * PRIMARY/UNIQUE keys give the reference's insert-if-absent
+  * semantics on the append tables. The queries share the parse
+  * definition, not its execution: each one lists and parses the
+  * input itself. Each table's rows come from the one projection the
+  * batch operators use too ([[graft.operators.MaillogOps]]).
   */
 object MaillogDaemon {
 
@@ -43,10 +48,8 @@ object MaillogDaemon {
     @transient private var state: ValueState[ClientRow] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl =
-        if (stateTtlMs > 0) TTLConfig(java.time.Duration.ofMillis(stateTtlMs))
-        else TTLConfig.NONE
-      state = getHandle.getValueState("client", Encoders.product[ClientRow], ttl)
+      state = getHandle.getValueState("client", Encoders.product[ClientRow],
+        StateTtl.config(stateTtlMs))
     }
 
     override def handleInputRows(key: (String, String, String),
@@ -69,41 +72,26 @@ object MaillogDaemon {
     * keys (same bounded-state contract as the message merge); the
     * DB row keeps the last upserted values. */
   def clientUpdates(parsed: DataFrame, stateTtlMs: Long = 0L): Dataset[ClientRow] = {
-    import graft.plans.RegexpExtractGroups.regexpGroups
     val spark = parsed.sparkSession
     import spark.implicits._
-    // two regex passes per candidate line (smtpd parse + client-string
-    // split) instead of rlike + one pass per capture group
-    val msg = col("log_message")
-    val clients = parsed
-      .select(col("log_timestamp"),
-        when(instr(msg, "client=") > 0, regexpGroups(msg, SmtpdRe)).as("g"))
-      .filter(col("g").isNotNull)
-      .withColumn("cs", regexpGroups(col("g").getItem(2), ClientSplitRe))
-      .select(
-        coalesce(col("cs").getItem(0), lit("")).as("client"),
-        coalesce(col("cs").getItem(1), lit("")).as("client_rdns"),
-        coalesce(col("cs").getItem(2), lit("")).as("client_addr"),
-        col("log_timestamp").as("client_lastseen"),
-        lit(1L).as("n_seen"))
+    MaillogOps.clientLines(parsed)
+      .select(col("client"), col("client_rdns"), col("client_addr"),
+        col("log_timestamp").as("client_lastseen"), lit(1L).as("n_seen"))
       .as[ClientRow]
-    // TimeMode.None unless TTL is on — see MaillogStream.messageUpdates
-    val mode = if (stateTtlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    clients.groupByKey(c => (c.client, c.client_rdns, c.client_addr))
+      .groupByKey(c => (c.client, c.client_rdns, c.client_addr))
       .transformWithState(new ClientUpsertProcessor(stateTtlMs),
-        mode, OutputMode.Update())
+        StateTtl.mode(stateTtlMs), OutputMode.Update())
   }
 
   /** Stateless delivery parse — append; DB unique key dedups
-    * (maillog2db.go:395-442). */
-  def deliveryRows(parsed: DataFrame): DataFrame = {
-    import graft.plans.RegexpExtractGroups.regexpGroups
-    // one regex pass per candidate line, all groups at once — same
-    // projection as the batch deliveries (MaillogOps)
-    val msg = col("log_message")
+    * (maillog2db.go:395-442). The ONE delivery projection: the batch
+    * deliveries (MaillogOps m04/m05/m07–m09/m11–m13) and
+    * [[graft.api.Graft.maillogTables]] add their `distinct()` to it.
+    * One regex pass per candidate line, all groups at once. */
+  def deliveryRows(parsed: DataFrame): DataFrame =
     parsed
       .select(col("log_timestamp"),
-        when(instr(msg, "to=") > 0, regexpGroups(msg, SmtpRe)).as("g"))
+        MaillogOps.branchGroups("to=", SmtpRe).as("g"))
       .filter(col("g").isNotNull)
       .select(
         col("log_timestamp").as("delivery_timestamp"),
@@ -115,7 +103,6 @@ object MaillogDaemon {
         col("g").getItem(6).as("delivery_dsn"),
         col("g").getItem(7).as("delivery_status"),
         col("g").getItem(8).as("delivery_statusext"))
-  }
 
   case class Conf(
       maillog: String = "/var/log/maillog",
@@ -309,47 +296,31 @@ object MaillogDaemon {
         tailer = Some(new FileTailer(c.maillog, spoolDir).start())
         spoolDir
       } else c.maillog
-    val parsed = MaillogStream.parsedStream(spark, inputPath, c.year, c.maxFilesPerTrigger).toDF()
+    val parsed = MaillogStream.parsedStream(spark, inputPath, c.year, c.maxFilesPerTrigger)
     def ckpt(t: String) = s"${c.checkpoint}/$t"
+    // one skeleton per table stream: query `pfmaillog2db_<t>`, its
+    // checkpoint `<checkpoint>/<t>`, the table's sink keyed on `keys`
+    def table(t: String, rows: DataFrame, mode: OutputMode, keys: Seq[String]) =
+      rows.writeStream.queryName(s"pfmaillog2db_$t")
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt(t)).trigger(trigger)
+        .foreachBatch(sinkFor(c, s"pfmaillog2db_$t", keys))
+        .start()
 
     // insert-if-absent (maillog2db.go:283-306) done in-stream: keyed
-    // dedup state, bounded by the event-time watermark
-    val logCols = Seq("log_timestamp", "log_mailhost", "log_process",
-      "log_processid", "log_message")
-    val logs = parsed
-      .withWatermark("log_timestamp", "1 hour")
-      .dropDuplicates(logCols)
-      .writeStream.queryName("pfmaillog2db_logs")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt("logs")).trigger(trigger)
-      .foreachBatch(sinkFor(c, "pfmaillog2db_logs", logCols))
-      .start()
-
-    val clients = clientUpdates(parsed, c.stateTtlMs).toDF()
-      .writeStream.queryName("pfmaillog2db_clients")
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt("clients")).trigger(trigger)
-      .foreachBatch(sinkFor(c, "pfmaillog2db_clients",
-        Seq("client", "client_rdns", "client_addr")))
-      .start()
-
-    val messages = MaillogStream
-      .messageUpdates(MaillogStream.patches(parsed), c.stateTtlMs).toDF()
-      .writeStream.queryName("pfmaillog2db_messages")
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt("messages")).trigger(trigger)
-      .foreachBatch(sinkFor(c, "pfmaillog2db_messages", Seq("message_queueid")))
-      .start()
-
-    val deliveries = deliveryRows(parsed)
-      .writeStream.queryName("pfmaillog2db_deliveries")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt("deliveries")).trigger(trigger)
-      .foreachBatch(sinkFor(c, "pfmaillog2db_deliveries",
-        Seq("delivery_timestamp", "delivery_queueid", "delivery_to", "delivery_relay",
-          "delivery_delay", "delivery_delays", "delivery_dsn", "delivery_status",
-          "delivery_statusext")))
-      .start()
+    // dedup state on the full parsed tuple, bounded by the event-time
+    // watermark
+    val logs = table("logs",
+      parsed.withWatermark("log_timestamp", "1 hour").dropDuplicates(parsed.columns),
+      OutputMode.Append, parsed.columns)
+    val clients = table("clients", clientUpdates(parsed, c.stateTtlMs).toDF(),
+      OutputMode.Update, Seq("client", "client_rdns", "client_addr"))
+    val messages = table("messages",
+      MaillogStream.messageUpdates(MaillogStream.patches(parsed), c.stateTtlMs).toDF(),
+      OutputMode.Update, Seq("message_queueid"))
+    val deliveryFrame = deliveryRows(parsed)
+    val deliveries = table("deliveries", deliveryFrame,
+      OutputMode.Append, deliveryFrame.columns)
 
     // the optional 5th stream: the m10 coverage monitor (Complete-
     // mode bounded aggregate; one cumulative snapshot dir per

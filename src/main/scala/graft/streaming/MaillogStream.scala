@@ -1,20 +1,22 @@
 package graft.streaming
 
-import graft.functions.MaillogParse._
+import graft.operators.MaillogOps
 import graft.sources.Maillog
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
-/** Structured-Streaming re-expression of the reference daemon
-  * (maillog2db.go:115-281): follow a log directory, parse each line,
-  * maintain the clients/messages upserts as keyed state, deliver to a
-  * pluggable sink.
+/** The Structured-Streaming parts of the reference daemon's
+  * re-expression (maillog2db.go:115-281), which [[MaillogDaemon.start]]
+  * wires into its four table streams: follow a log directory, parse
+  * each line, maintain the messages upsert as keyed state.
   *
   * Mapping from the reference:
-  *  - `tail -F` file follow (go:168)      → `readStream.text(dir)`
-  *    (log rotation lands new files in the dir; each micro-batch sees
-  *    only new data)
+  *  - `tail -F` file follow (go:168)      → [[FileTailer]] follows
+  *    the one growing file across rotations and spools completed
+  *    lines into a directory; `readStream.text` over that directory
+  *    (or over a directory the rotation itself fills) sees only new
+  *    files per micro-batch
   *  - per-line regex cascade (go:180-280) → the same shuffle-free
   *    projection used by the batch operators
   *  - upsert-by-queueid (go:332-393)      → `transformWithState`
@@ -30,10 +32,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQ
   * on an unbounded 100 TB/day stream.
   */
 object MaillogStream {
-
-  case class ParsedLine(
-      log_timestamp: java.sql.Timestamp, log_mailhost: String,
-      log_process: String, log_processid: String, log_message: String)
 
   /** One parsed patch against a message row; nulls where the branch
     * doesn't contribute (qmgr → from/size/…, smtpd → client,
@@ -57,8 +55,7 @@ object MaillogStream {
     * maillog2db.go:444 — same default here). */
   def parsedStream(spark: SparkSession, path: String,
                    year: Int = 0,
-                   maxFilesPerTrigger: Int = 0): Dataset[ParsedLine] = {
-    import spark.implicits._
+                   maxFilesPerTrigger: Int = 0): DataFrame = {
     val reader = spark.readStream
     // backpressure for large backlogs (first start against months of
     // rotated logs): bound each micro-batch instead of one huge batch
@@ -66,38 +63,19 @@ object MaillogStream {
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     Maillog.parsed(
       reader.text(path).withColumnRenamed("value", "line"), year)
-      .as[ParsedLine]
   }
 
-  /** Branch extraction shared by streaming and batch replay.
-    *
-    * Single regex pass per (line, branch) via the codegen'd
-    * [[graft.plans.RegexpExtractGroups]], mirroring the batch merge
-    * (MaillogOps.m03Messages): the substring pre-filter is a
-    * necessary condition of each branch regex, so the expensive
-    * pattern runs only on candidate lines, and one execution yields
-    * all capture groups at once. */
+  /** The message patches: the patch fields of
+    * [[graft.operators.MaillogOps.branchLines]], the one branch frame
+    * the batch merge (`MaillogOps.messagesFrom`) aggregates too. */
   def patches(parsed: DataFrame): Dataset[MsgPatch] = {
-    import graft.plans.RegexpExtractGroups.regexpGroups
     val spark = parsed.sparkSession
     import spark.implicits._
-    val msg = col("log_message")
-    def gated(marker: String, re: String) =
-      when(instr(msg, marker) > 0, regexpGroups(msg, re))
-    parsed
+    MaillogOps.branchLines(parsed)
       .select(
+        col("qid").as("queueid"),
         col("log_timestamp").as("ts"),
         col("log_mailhost").as("host"),
-        gated("from=", QmgrRe).as("gq"),
-        gated("client=", SmtpdRe).as("gc"),
-        gated("message-id=", CleanupRe).as("gm"))
-      .withColumn("queueid", coalesce(col("gq").getItem(1),
-        col("gc").getItem(1), col("gm").getItem(1)))
-      .filter(col("queueid").isNotNull)
-      .select(
-        col("queueid"),
-        col("ts"),
-        col("host"),
         col("gq").getItem(2).as("from"),
         col("gq").getItem(3).cast("long").as("size"),
         col("gq").getItem(4).cast("int").as("nrcpt"),
@@ -129,12 +107,9 @@ object MaillogStream {
       extends StatefulProcessor[String, MsgPatch, MessageRow] {
     @transient private var state: ValueState[MessageRow] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl =
-        if (stateTtlMs > 0) TTLConfig(java.time.Duration.ofMillis(stateTtlMs))
-        else TTLConfig.NONE
-      state = getHandle.getValueState("message", Encoders.product[MessageRow], ttl)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState("message", Encoders.product[MessageRow],
+        StateTtl.config(stateTtlMs))
 
     override def handleInputRows(qid: String, rows: Iterator[MsgPatch],
                                  timerValues: TimerValues): Iterator[MessageRow] = {
@@ -153,26 +128,18 @@ object MaillogStream {
     * touched in the micro-batch. With `stateTtlMs > 0`, idle keys are
     * evicted after that much processing time — the knob that bounds
     * state to O(active queue ids) on an unbounded stream. Requires
-    * the RocksDB state store provider (set by [[run]] /
-    * [[MaillogDaemon.start]]). */
+    * the RocksDB state store provider (set by [[MaillogDaemon.start]]). */
   def messageUpdates(patches: Dataset[MsgPatch],
                      stateTtlMs: Long = 0L): Dataset[MessageRow] = {
     import patches.sparkSession.implicits._
-    // TTL needs the processing-time clock; without TTL use
-    // TimeMode.None — Spark schedules extra (empty) micro-batches
-    // for EVERY ProcessingTime-mode stateful operator
-    // (TransformWithStateExecBase.shouldRunAnotherBatch is
-    // unconditionally true in that mode), so the cheaper mode also
-    // lets availability-bounded runs quiesce on their own
-    val mode = if (stateTtlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     patches.groupByKey(_.queueid)
       .transformWithState(new MessageMergeProcessor(stateTtlMs),
-        mode, OutputMode.Update())
+        StateTtl.mode(stateTtlMs), OutputMode.Update())
   }
 
   /** Bounded-run helper for TTL-enabled queries: in processing-time
     * mode Spark keeps constructing empty micro-batches after the
-    * source is drained (see note in [[messageUpdates]]), so
+    * source is drained (see [[StateTtl]]), so
     * `Trigger.AvailableNow` alone never terminates. This watchdog
     * implements AvailableNow's contract — process everything
     * available, then stop — by stopping each query once it commits a
@@ -222,7 +189,7 @@ object MaillogStream {
     * bounded-aggregation class — no watermark, no TTL needed). A
     * deployment alerts on n_unmatched rising between snapshots. */
   def coverageUpdates(parsed: DataFrame): DataFrame =
-    graft.operators.MaillogOps.coverageOf(parsed)
+    MaillogOps.coverageOf(parsed)
 
   /** The coverage monitor as a runnable sink: one cumulative
     * snapshot table per micro-batch. Each snapshot lands in its own
@@ -279,24 +246,23 @@ object MaillogStream {
   private[streaming] def useRocksDbStateStore(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+}
 
-  /** Full pipeline: follow `inputDir`, maintain message state, deliver
-    * each micro-batch of updates to `sink`. */
-  def run(spark: SparkSession, inputDir: String, checkpointDir: String,
-          sink: (DataFrame, Long) => Unit,
-          trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-          stateTtlMs: Long = 0L): StreamingQuery = {
-    useRocksDbStateStore(spark)
-    val q = messageUpdates(patches(parsedStream(spark, inputDir).toDF()), stateTtlMs)
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(sink)
-      .start()
-    if (stateTtlMs > 0 && trigger == Trigger.AvailableNow())
-      stopWhenDrained(Seq(q))
-    q
-  }
+/** The keyed-state TTL policy of graft's `transformWithState`
+  * streams (the maillog daemon's client upsert and message merge,
+  * NearDupStream, SemStream, SpanStream): `stateTtlMs > 0` evicts a
+  * key idle that long, which needs the processing-time clock;
+  * otherwise no TTL and `TimeMode.None`. TTL is the only reason to
+  * pay for processing-time mode: Spark schedules extra (empty)
+  * micro-batches for EVERY ProcessingTime-mode stateful operator
+  * (TransformWithStateExecBase.shouldRunAnotherBatch is
+  * unconditionally true in that mode), so the cheaper mode also lets
+  * availability-bounded runs quiesce on their own. */
+private[streaming] object StateTtl {
+  def config(stateTtlMs: Long): TTLConfig =
+    if (stateTtlMs > 0) TTLConfig(java.time.Duration.ofMillis(stateTtlMs))
+    else TTLConfig.NONE
+
+  def mode(stateTtlMs: Long): TimeMode =
+    if (stateTtlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
 }

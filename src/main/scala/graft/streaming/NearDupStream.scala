@@ -90,12 +90,9 @@ object NearDupStream {
       extends StatefulProcessor[(Int, String), BandedDoc, CandPair] {
     @transient private var seen: ListState[DocSig] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl =
-        if (stateTtlMs > 0) TTLConfig(java.time.Duration.ofMillis(stateTtlMs))
-        else TTLConfig.NONE
-      seen = getHandle.getListState("seen", Encoders.product[DocSig], ttl)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      seen = getHandle.getListState("seen", Encoders.product[DocSig],
+        StateTtl.config(stateTtlMs))
 
     override def handleInputRows(key: (Int, String), rows: Iterator[BandedDoc],
                                  timerValues: TimerValues): Iterator[CandPair] = {
@@ -126,10 +123,10 @@ object NearDupStream {
   def candidates(docs: DataFrame, stateTtlMs: Long = 0L): Dataset[CandPair] = {
     import docs.sparkSession.implicits._
     MaillogStream.useRocksDbStateStore(docs.sparkSession)
-    val mode = if (stateTtlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     banded(withSignatures(docs))
       .groupByKey(r => (r.band, r.bandkey))
-      .transformWithState(new BucketProcessor(stateTtlMs), mode, OutputMode.Append())
+      .transformWithState(new BucketProcessor(stateTtlMs),
+        StateTtl.mode(stateTtlMs), OutputMode.Append())
   }
 
   /** TTL-enabled runs are in processing-time mode, where Spark

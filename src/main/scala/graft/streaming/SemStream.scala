@@ -4,7 +4,7 @@ import graft.functions.TextFns._
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
 
 /** Streaming twin of d18's incremental semantic screen — vectors
   * ARRIVE as a stream and each is screened against the FROZEN corpus
@@ -122,12 +122,9 @@ object SemStream {
       extends StatefulProcessor[Long, Match, SemVerdict] {
     @transient private var done: ValueState[Boolean] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl =
-        if (stateTtlMs > 0) TTLConfig(java.time.Duration.ofMillis(stateTtlMs))
-        else TTLConfig.NONE
-      done = getHandle.getValueState("done", Encoders.scalaBoolean, ttl)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      done = getHandle.getValueState("done", Encoders.scalaBoolean,
+        StateTtl.config(stateTtlMs))
 
     override def handleInputRows(key: Long, rows: Iterator[Match],
                                  timerValues: TimerValues): Iterator[SemVerdict] = {
@@ -175,15 +172,13 @@ object SemStream {
                minCos: Double = 0.3, stateTtlMs: Long = 0L): Dataset[SemVerdict] = {
     import vecs.sparkSession.implicits._
     MaillogStream.useRocksDbStateStore(vecs.sparkSession)
-    val mode =
-      if (stateTtlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     routed(vecs, cents)
       .join(corpusIdx, Seq("cell"), "left")
       .select(col("vec_id"), col("cell"), col("corp_id"),
         qcos(qdot(col("qv"), col("qv_c")), col("nrm"), col("nc")).as("cos"))
       .as[Match]
       .groupByKey(_.vec_id)
-      .transformWithState(new ScreenProcessor(minCos, stateTtlMs), mode,
-        OutputMode.Append())
+      .transformWithState(new ScreenProcessor(minCos, stateTtlMs),
+        StateTtl.mode(stateTtlMs), OutputMode.Append())
   }
 }

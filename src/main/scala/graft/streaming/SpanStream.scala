@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
 
 /** Streaming twin of d17's incremental verbatim-span screen
   * (VERDICT r5 #4): documents ARRIVE as a stream and each is
@@ -60,12 +60,9 @@ object SpanStream {
       extends StatefulProcessor[(Long, Long, Long), SeedMatch, Span] {
     @transient private var done: ValueState[Boolean] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl =
-        if (stateTtlMs > 0) TTLConfig(java.time.Duration.ofMillis(stateTtlMs))
-        else TTLConfig.NONE
-      done = getHandle.getValueState("done", Encoders.scalaBoolean, ttl)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      done = getHandle.getValueState("done", Encoders.scalaBoolean,
+        StateTtl.config(stateTtlMs))
 
     override def handleInputRows(key: (Long, Long, Long),
                                  rows: Iterator[SeedMatch],
@@ -104,8 +101,6 @@ object SpanStream {
             minSpan: Int = 12, stateTtlMs: Long = 0L): Dataset[Span] = {
     import docs.sparkSession.implicits._
     MaillogStream.useRocksDbStateStore(docs.sparkSession)
-    val mode =
-      if (stateTtlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
     val inc = Dedup.spanSeedsRaw(docs)
       .select(col("doc_id").as("doc_inc"), col("pos").as("ia"), col("term"))
     inc.join(corpusIdx, "term")
@@ -113,7 +108,7 @@ object SpanStream {
         (col("ia") - col("ib")).as("diag"), col("ia"), col("ib"))
       .as[SeedMatch]
       .groupByKey(r => (r.doc_inc, r.doc_corp, r.diag))
-      .transformWithState(new SpanProcessor(minSpan, stateTtlMs), mode,
-        OutputMode.Append())
+      .transformWithState(new SpanProcessor(minSpan, stateTtlMs),
+        StateTtl.mode(stateTtlMs), OutputMode.Append())
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
-import graft.streaming.{JdbcUpsertSink, MaillogStream}
+import graft.streaming.{JdbcUpsertSink, MaillogDaemon, MaillogStream}
 import graft.sources.Maillog
 import java.nio.file.Files
 
 /** End-to-end Structured Streaming test: log file lands in a watched
-  * dir → parse → stateful merge-by-queueid → sink. Mirrors the
-  * reference daemon's lifecycle on real files. */
+  * dir → parse → stateful merge-by-queueid → sink, through the daemon.
+  * Mirrors the reference daemon's lifecycle on real files. */
 class MaillogStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,29 +25,27 @@ class MaillogStreamSpec extends SparkSpec {
     val dir = Files.createTempDirectory("maillog").toFile
     val ckpt = Files.createTempDirectory("ckpt").toString
     val out = Files.createTempDirectory("out").toString
-    val avail = org.apache.spark.sql.streaming.Trigger.AvailableNow()
-    def sink(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      batch.write.mode("append").parquet(out)
-
     // state TTL enabled: with the native state-store TTL this
     // composes with AvailableNow (no timeout batches scheduled, the
     // run still terminates)
+    def runDaemon(): Unit = MaillogDaemon.start(spark,
+      args = Array("-maillog", dir.getAbsolutePath, "-out", out,
+        "-checkpoint", ckpt, "-state-ttl-ms", "3600000"),
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreach(_.awaitTermination())
+
     Files.write(new java.io.File(dir, "maillog.1").toPath,
       lines1.mkString("\n").getBytes)
-    val q1 = MaillogStream.run(spark, dir.getAbsolutePath, ckpt, sink, avail,
-      stateTtlMs = 3600000L)
-    q1.awaitTermination()
+    runDaemon()
 
-    // second file + a fresh query on the same checkpoint: keyed state
+    // second file + a fresh daemon on the same checkpoint: keyed state
     // must survive the restart (the daemon-restart scenario)
     Files.write(new java.io.File(dir, "maillog.2").toPath,
       lines2.mkString("\n").getBytes)
-    val q2 = MaillogStream.run(spark, dir.getAbsolutePath, ckpt, sink, avail,
-      stateTtlMs = 3600000L)
-    q2.awaitTermination()
+    runDaemon()
 
     // last update per queueid is the merged row
-    val rows = spark.read.parquet(out)
+    val rows = spark.read.parquet(s"$out/pfmaillog2db_messages")
       .orderBy($"message_queueid", $"n_lines".desc)
       .groupBy("message_queueid")
       .agg(
@@ -95,7 +93,7 @@ class MaillogStreamSpec extends SparkSpec {
     Files.write(new java.io.File(dir, "maillog.1").toPath,
       lines1.mkString("\n").getBytes)
     val q1 = MaillogStream.coverageStream(
-      MaillogStream.parsedStream(spark, dir.getAbsolutePath).toDF(),
+      MaillogStream.parsedStream(spark, dir.getAbsolutePath),
       out, ckpt, avail)
     q1.awaitTermination()
 
@@ -105,7 +103,7 @@ class MaillogStreamSpec extends SparkSpec {
     Files.write(new java.io.File(dir, "maillog.2").toPath,
       (lines2 :+ driftLine).mkString("\n").getBytes)
     val q2 = MaillogStream.coverageStream(
-      MaillogStream.parsedStream(spark, dir.getAbsolutePath).toDF(),
+      MaillogStream.parsedStream(spark, dir.getAbsolutePath),
       out, ckpt, avail)
     q2.awaitTermination()
 

@@ -273,6 +273,37 @@ class PlanShapeSpec extends SparkSpec {
     }).nonEmpty, "the EXISTS must plan as one semi join, not a per-order probe")
   }
 
+  test("maillog projections: one shuffle for clients and messages, none for deliveries") {
+    // the three row projections the batch operators and the daemon
+    // share. The regex counts pin the optimized plans, header parse
+    // included (the optimizer pushes each not-null filter below the
+    // projection, so a regex can appear in the Filter as well as in
+    // the Project): an edit to a shared projection must not make a
+    // regex run one more time
+    val f = java.nio.file.Files.createTempFile("maillog-shape", ".log")
+    java.nio.file.Files.write(f, Seq(
+      "Mar 05 10:00:01 mx1 postfix/smtpd[201]: 4A1B2C: client=mail.alpha.example[192.0.2.10]",
+      "Mar 05 10:00:02 mx1 postfix/cleanup[202]: 4A1B2C: message-id=<m1@alpha.example>",
+      "Mar 05 10:00:03 mx1 postfix/qmgr[203]: 4A1B2C: from=<alice@alpha.example>, size=1200, nrcpt=2 (queue active)",
+      "Mar 05 10:00:04 mx1 postfix/smtp[204]: 4A1B2C: to=<bob@beta.example>, relay=mx.beta.example[198.51.100.5]:25, delay=1.2, delays=0.1/0.2/0.3/0.6, dsn=2.0.0, status=sent (250 ok)"
+    ).mkString("\n").getBytes)
+    val parsed = graft.sources.Maillog.parsed(
+      graft.sources.Maillog.readLines(spark, f.toString), 2024)
+    def regexps(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case n =>
+        n.expressions.map(_.collect {
+          case r: graft.plans.RegexpExtractGroups => r }.size).sum
+      }.sum
+    for ((name, df, nShuffles, nRegexps) <- Seq(
+        ("clientsFrom", graft.operators.MaillogOps.clientsFrom(parsed), 1, 8),
+        ("messagesFrom", graft.operators.MaillogOps.messagesFrom(parsed), 1, 15),
+        ("deliveryRows", graft.streaming.MaillogDaemon.deliveryRows(parsed), 0, 7))) {
+      assert(shuffles(df) == nShuffles, s"$name must shuffle $nShuffles time(s)")
+      assert(regexps(df) == nRegexps,
+        s"$name must plan $nRegexps regexp_extract_groups, not ${regexps(df)}")
+    }
+  }
+
   test("no query plans an unpartitioned window over table data") {
     // the round-1 scale-killers (m06 global rank, vocab row_number)
     // must stay dead: sweep every registered batch query
