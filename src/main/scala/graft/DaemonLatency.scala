@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.Trigger
   * commit — the whole path a deployed reader experiences.
   *
   * Not part of the driver contract; a measurement main like
-  * [[Probe]]/[[Stress]]. Prints ONE JSON line (median + p90 seconds
+  * [[Stress]]. Prints ONE JSON line (median + p90 seconds
   * per table over the waves).
   *
   * Usage: runMain graft.DaemonLatency [waves] [triggerSec]

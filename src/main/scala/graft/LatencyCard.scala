@@ -33,7 +33,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    merge-table read and the per-row literal-replace fold.
   *
   * Not part of the driver contract; a measurement main like
-  * [[Probe]]/[[Stress]]. Prints ONE JSON line whose `metric` is
+  * [[Stress]]. Prints ONE JSON line whose `metric` is
   * `<card>_latency`; `tools/ops_cards.py` runs the cards in turn.
   *
   * Usage: runMain graft.LatencyCard <card> [waves] [triggerSec]

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * `might_contain` so a mode that silently didn't inject can't
   * masquerade as a null result.
   *
-  * Not part of the driver contract ([[Probe]]/[[Stress]] class).
+  * Not part of the driver contract ([[Stress]] class).
   * Findings land in docs/PLANS.md.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.RtFilter [mult] [passes]

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming twin of the frozen IVFPQ search (VERDICT r9 #2 / r10 #1)
   * — the production read path the whole AnnIndexStore/FreezeStore
@@ -26,20 +26,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * served off the frozen generation's bucketed layout, exchange-free
   * on the corpus side exactly like the batch plan (AnnShipSpec).
   *
-  * GENERATION SEMANTICS: the pointer is resolved ONCE per micro-batch
-  * (inside [[graft.operators.Similarity.searchFrozenForQueries]]), so
-  * a RE-FREEZE concurrent with the stream lands BETWEEN batches —
-  * every result batch is wholly-old or wholly-new, never mixed
-  * (AnnStreamSpec pins it across a mid-stream re-freeze, plus
-  * checkpoint-restart replay). The FreezeStore retention contract
-  * applies per batch, not per stream: each batch re-binds fresh
-  * tables, so even `retain = 1` is safe at any stream length.
-  *
-  * EXACTLY-ONCE: results land under one directory per micro-batch id,
-  * overwritten on replay — the idempotent-foreachBatch-sink pattern —
-  * so a checkpoint-restart re-run of a committed batch rewrites the
-  * same rows instead of duplicating them. Read results back with one
-  * `spark.read.parquet(outDir)` over all batch subdirs.
+  * The pointer binding, replay and empty-batch rules are
+  * [[BatchDirs]]'s; AnnStreamSpec pins them across a mid-stream
+  * re-freeze and a checkpoint restart.
   */
 object AnnStream {
 
@@ -53,20 +42,9 @@ object AnnStream {
       outDir: String, checkpoint: String,
       probeFine: Int = 2, labelFiltered: Boolean = false,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    queries.writeStream
-      .queryName(s"ann_search_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // overwrite-by-batch-id: replays rewrite, never duplicate
-        Similarity
-          .searchFrozenForQueries(batch, corpus, name, probeFine,
-            labelFiltered)
-          .write.mode("overwrite").format("parquet")
-          .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+    BatchDirs.start(queries, s"ann_search_$name", outDir, checkpoint,
+        trigger)(Similarity.searchFrozenForQueries(_, corpus, name,
+      probeFine, labelFiltered))
 
   /** The at-rest corpus frame for [[searchStream]]'s rerank side —
     * the same quantized embeddings view every batch search reads. */
@@ -81,20 +59,10 @@ object AnnStream {
     * `foreachBatch` for the same reason as [[searchStream]] — the
     * two rank windows over the self-derived scored frame cannot plan
     * inside an append-mode stream, and rebuilding them as state
-    * would fork the algebra batch s21's oracle gates. The idempotent
-    * by-batch-id sink gives the same exactly-once replay contract. */
+    * would fork the algebra batch s21's oracle gates. */
   def mineStream(queries: DataFrame, corpus: DataFrame,
       outDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    queries.writeStream
-      .queryName("ann_mine")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Similarity.minedForQueries(batch, corpus)
-          .write.mode("overwrite").format("parquet")
-          .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+    BatchDirs.start(queries, "ann_mine", outDir, checkpoint, trigger)(
+      Similarity.minedForQueries(_, corpus))
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming twin of d19's bloom pre-screen — the ingest-time shape
   * the filter exists for: a deployment freezes the corpus, builds the
@@ -59,16 +60,15 @@ object BloomStream {
     * the filter state exact) and the post-absorb saturation row
     * (the literal d22 aggregate) lands under the batch id — the
     * fill-share trend a deployment tails before calling
-    * [[Dedup.refreezeBloomIfSaturated]]. Pointer re-binds per
-    * trigger inside the absorb's lease. */
+    * [[Dedup.refreezeBloomIfSaturated]]. Its own `foreachBatch`, not
+    * [[BatchDirs.start]]: the pointer re-binds per trigger inside the
+    * absorb's lease, and the write must stay inside it too. */
   def absorbStream(docStream: DataFrame, name: String, outDir: String,
       checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     docStream.writeStream
       .queryName(s"bloom_absorb_$name")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+      .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -79,9 +79,8 @@ object BloomStream {
           // generation; the nested absorb re-enters the hold)
           graft.sources.FreezeStore.withFamilyLease(batch.sparkSession, name) {
             Dedup.absorbBloomArrivals(batch.sparkSession, batch, name)
-            Dedup.bloomSaturationFrozen(batch.sparkSession, name)
-              .write.mode("overwrite").format("parquet")
-              .save(s"$outDir/batch=$batchId")
+            BatchDirs.save(Dedup.bloomSaturationFrozen(batch.sparkSession, name),
+              outDir, batchId)
           }
       }
       .start()

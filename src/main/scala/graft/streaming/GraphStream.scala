@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.sources.GraphIndexStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming twins of the FROZEN graph edge index's read and monitor
   * paths — the fourth family's members of the per-family streaming
@@ -12,15 +12,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * [[TriStream]] already streams the corpus-closing probe against an
   * IN-MEMORY edge frame bound once at stream start (a stateless
   * stream-static join — the plan the optimizer handles alone). These
-  * twins read the SHIPPED index instead: `foreachBatch`, with the
-  * generation pointer resolved ONCE per micro-batch — so a
-  * mid-stream [[GraphIndexStore.refreezeIfStale]] lands BETWEEN
-  * batches and every result batch probes a wholly-old or wholly-new
-  * corpus, never a mixed one (the AnnStream decision record; a
+  * twins read the SHIPPED index instead, through [[BatchDirs]]: the
+  * pointer re-binds per micro-batch, so a mid-stream
+  * [[GraphIndexStore.refreezeIfStale]] lands between batches. A
   * stream-static join against `spark.table(...)` would pin the
   * stream to the generation alive at planning and die with its
-  * retention window). Per-batch-id overwrite sinks make checkpoint
-  * replays idempotent.
+  * retention window.
   */
 object GraphStream {
 
@@ -33,19 +30,11 @@ object GraphStream {
   def probeStream(edgeStream: DataFrame, name: String, outDir: String,
                   checkpoint: String,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    edgeStream.writeStream
-      .queryName(s"graph_probe_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          GraphIndexStore.closedFrozen(batch.sparkSession,
-            batch.select("x", "y"), name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+    BatchDirs.start(edgeStream, s"graph_probe_$name", outDir, checkpoint,
+        trigger) { batch =>
+      GraphIndexStore.closedFrozen(batch.sparkSession,
+        batch.select("x", "y"), name)
+    }
 
   /** Per micro-batch: the g05 banded degree-drift rows of the
     * arriving edges against the LIVE frozen generation
@@ -56,19 +45,11 @@ object GraphStream {
   def driftStream(edgeStream: DataFrame, name: String, outDir: String,
                   checkpoint: String,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    edgeStream.writeStream
-      .queryName(s"graph_drift_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          GraphIndexStore.staleness(batch.sparkSession,
-            batch.select("x", "y"), name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+    BatchDirs.start(edgeStream, s"graph_drift_$name", outDir, checkpoint,
+        trigger) { batch =>
+      GraphIndexStore.staleness(batch.sparkSession,
+        batch.select("x", "y"), name)
+    }
 
   /** Per micro-batch: the g09 community-bridge bands of the arriving
     * weighted (x, y, w) pairs against the LIVE frozen community
@@ -76,22 +57,13 @@ object GraphStream {
     * bridgeBands algebra, one definition with the live key). A
     * deployment tails the bridge/novel mass and calls
     * [[GraphIndexStore.refreezeCommunitiesIfStale]] when the
-    * non-intra share trips (round 15). Pointer re-binds per batch —
-    * a mid-stream community refreeze lands between batches. */
+    * non-intra share trips (round 15). */
   def bridgesStream(pairStream: DataFrame, name: String, outDir: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    pairStream.writeStream
-      .queryName(s"graph_bridges_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          GraphIndexStore.communityBridges(batch.sparkSession,
-            batch.select("x", "y", "w"), name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+    BatchDirs.start(pairStream, s"graph_bridges_$name", outDir,
+        checkpoint, trigger) { batch =>
+      GraphIndexStore.communityBridges(batch.sparkSession,
+        batch.select("x", "y", "w"), name)
+    }
 }

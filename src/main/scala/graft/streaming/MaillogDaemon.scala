@@ -284,15 +284,21 @@ object MaillogDaemon {
         // reads it back as a path: a remote checkpoint URI (hdfs://,
         // s3a://) would silently split the two onto different
         // filesystems — the tailer spooling into a literal './hdfs:…'
-        // directory while the stream lists the empty remote path
-        val scheme =
-          try java.net.URI.create(c.checkpoint).getScheme
-          catch { case _: IllegalArgumentException => null } // plain local path
-        require(scheme == null || scheme == "file",
+        // directory while the stream lists the empty remote path. A
+        // `file:` URI resolves to its local path, and both sides get
+        // that one path.
+        val uri =
+          try Some(java.net.URI.create(c.checkpoint))
+          catch { case _: IllegalArgumentException => None } // plain local path
+        val scheme = uri.flatMap(u => Option(u.getScheme))
+        require(scheme.forall(_ == "file"),
           s"tailing a single file requires a local checkpoint dir " +
-            s"(got scheme '$scheme'); use a directory input for " +
+            s"(got scheme '${scheme.orNull}'); use a directory input for " +
             "remote-checkpoint deployments")
-        val spoolDir = s"${c.checkpoint}/tail-spool"
+        val localCkpt =
+          if (scheme.isDefined) java.nio.file.Paths.get(uri.get)
+          else java.nio.file.Paths.get(c.checkpoint)
+        val spoolDir = localCkpt.resolve("tail-spool").toString
         tailer = Some(new FileTailer(c.maillog, spoolDir).start())
         spoolDir
       } else c.maillog

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.MaillogOps
 import graft.sources.Maillog
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
@@ -214,29 +215,37 @@ object MaillogStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/snap=$batchId")
-        coverageSnapIds(outDir).sorted.dropRight(2).foreach { old =>
-          // recursive delete (round-16 self-review: a crashed write's
-          // leftover _temporary subdirectory would make a flat
-          // file-then-dir delete fail forever)
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(outDir, s"snap=$old"))
-          ()
-        }
+        val (fs, snaps) = coverageSnaps(batch.sparkSession, outDir)
+        // recursive delete (round-16 self-review: a crashed write's
+        // leftover _temporary subdirectory would make a flat
+        // file-then-dir delete fail forever)
+        snaps.sortBy(_._1).dropRight(2)
+          .foreach { case (_, dir) => fs.delete(dir, true) }
       }
       .start()
 
-  private def coverageSnapIds(outDir: String): Seq[Long] =
-    Option(new java.io.File(outDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("snap="))
-      .map(_.getName.stripPrefix("snap=").toLong).toSeq
+  /** The `snap=<id>` directories under `outDir` with their ids,
+    * listed through the Hadoop filesystem Spark wrote them with, so
+    * a `file:` URI `outDir` resolves as the write did. */
+  private def coverageSnaps(spark: SparkSession, outDir: String)
+      : (FileSystem, Seq[(Long, Path)]) = {
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val snaps =
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap="))
+        .map(st => st.getPath.getName.stripPrefix("snap=").toLong -> st.getPath)
+    (fs, snaps)
+  }
 
   /** Resolve the newest complete coverage snapshot under `outDir` —
     * the ops-reader entry point matching [[coverageStream]]'s
     * per-batch layout. */
   def latestCoverage(spark: SparkSession, outDir: String): DataFrame = {
-    val ids = coverageSnapIds(outDir)
-    require(ids.nonEmpty, s"no coverage snapshot under $outDir yet")
-    spark.read.parquet(s"$outDir/snap=${ids.max}")
+    val snaps = coverageSnaps(spark, outDir)._2
+    require(snaps.nonEmpty, s"no coverage snapshot under $outDir yet")
+    spark.read.parquet(snaps.maxBy(_._1)._2.toString)
   }
 
   /** `transformWithState` runs only on the RocksDB state store

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Multimodal
 import graft.sources.MediaIndexStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming twin of the frozen media match — the production read
   * path of media dedup at scale: images ARRIVE (an ingest feed of
@@ -21,40 +21,28 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * continuous plan — the match's candidate `distinct` and
   * multi-joins all derive from the same arriving rows (unsupported
   * shapes in append mode), and re-deriving them as explicit state
-  * would fork the algebra the mm11 oracle gates. Pointer resolved
-  * ONCE per micro-batch (inside `matchFrozen`) ⟹ a mid-stream
-  * re-freeze lands BETWEEN batches, every result batch wholly-old or
-  * wholly-new; the per-batch-id overwrite sink makes checkpoint
-  * replays idempotent (MediaShipSpec pins restart-replay equality
-  * and the re-freeze boundary).
+  * would fork the algebra the mm11 oracle gates. The pointer
+  * resolves inside `matchFrozen`, once per micro-batch
+  * ([[BatchDirs]]); MediaShipSpec pins restart-replay equality and
+  * the re-freeze boundary.
   */
 object MediaStream {
 
   /** Start the match stream: `media` is a STREAMING frame with
     * (`idCol`: long, `binCol`: binary image bytes) columns. Results:
     * the batch match's (doc_id, match_id, hamming) rows under
-    * `outDir/batch=<id>/`; read them back with one
-    * `spark.read.parquet(outDir)` over all batch subdirs. */
+    * `outDir/batch=<id>/`. */
   def matchStream(media: DataFrame, name: String, outDir: String,
       checkpoint: String, tw: Int = 32, th: Int = 32,
       maxHamming: Int = 3, idCol: String = "doc_id",
       binCol: String = "media",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    media.writeStream
-      .queryName(s"media_match_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // overwrite-by-batch-id: replays rewrite, never duplicate
-        MediaIndexStore
-          .matchFrozen(batch.sparkSession,
-            Multimodal.mediaHashes(batch, tw, th, idCol, binCol),
-            name, maxHamming)
-          .write.mode("overwrite").format("parquet")
-          .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+    BatchDirs.start(media, s"media_match_$name", outDir, checkpoint,
+        trigger) { batch =>
+      MediaIndexStore.matchFrozen(batch.sparkSession,
+        Multimodal.mediaHashes(batch, tw, th, idCol, binCol),
+        name, maxHamming)
+    }
 
   /** Streaming twin of mm12's ARRIVAL side — the continuous
     * band-occupancy counters a deployment watches between re-freezes

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
+import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, Trigger}
 
 /** Incremental near-duplicate detection: documents arrive as a
   * stream, and each new document is checked against the FULL history
@@ -133,7 +133,7 @@ object NearDupStream {
     * schedules empty micro-batches forever — bounded runs need the
     * same drain watchdog as the maillog daemon (see
     * [[MaillogStream.stopWhenDrained]]). */
-  def stopWhenDrained(qs: Seq[org.apache.spark.sql.streaming.StreamingQuery]): Unit =
+  def stopWhenDrained(qs: Seq[StreamingQuery]): Unit =
     MaillogStream.stopWhenDrained(qs)
 
   case class HashedDoc(h: String, doc_id: Long, text: String)
@@ -195,54 +195,30 @@ object NearDupStream {
     * record verbatim): arriving (doc_id, text) micro-batches band
     * through the literal production signature algebra and probe the
     * SHIPPED bucket table ([[graft.operators.Dedup.nearMatchesFrozen]]
-    * — one definition with the batch probe and p29's nightly).
-    * Pointer re-bound per trigger (a mid-stream
-    * refreezeNearDupIfStale lands between batches — every probed
-    * batch wholly one generation); per-batch-id overwrite sinks keep
-    * checkpoint replays idempotent. */
+    * — one definition with the batch probe and p29's nightly). A
+    * mid-stream refreezeNearDupIfStale lands between batches
+    * ([[BatchDirs]]). */
   def matchFrozenStream(docStream: DataFrame, name: String, outDir: String,
       checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName(s"neardup_match_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Dedup
-            .nearMatchesFrozen(batch.sparkSession, batch, name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, s"neardup_match_$name", outDir, checkpoint,
+        trigger) { batch =>
+      graft.operators.Dedup.nearMatchesFrozen(batch.sparkSession, batch, name)
+    }
 
   /** CONTINUOUS drift monitor for the frozen band index (round 17 —
     * the stream_band_drift/stream_text_drift sibling for the
     * near-dup screen): per micro-batch, the arrivals' band rows
     * graded against the shipped bucket population through the ONE
-    * d21 aggregate ([[graft.operators.Dedup.nearDupStaleness]]).
-    * Pointer re-bound per trigger; per-batch-id idempotent sinks. */
+    * d21 aggregate ([[graft.operators.Dedup.nearDupStaleness]]),
+    * one generation per batch ([[BatchDirs]]). */
   def indexDriftStream(docStream: DataFrame, name: String, outDir: String,
       checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName(s"neardup_drift_$name")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Dedup
-            .nearDupStaleness(batch.sparkSession, batch, name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, s"neardup_drift_$name", outDir, checkpoint,
+        trigger) { batch =>
+      graft.operators.Dedup.nearDupStaleness(batch.sparkSession, batch, name)
+    }
 
   /** The previous call's persisted banding, released on the next
     * call: an internal persist with no caller-visible handle would

@@ -13,12 +13,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * near-dups of batch N's admissions.
   *
   * EXACTLY-ONCE ADMISSION under at-least-once foreachBatch: the
-  * per-batch-id overwrite sink the other twins use is NOT enough
-  * here, because a replayed batch's recomputed serve would run
-  * against a store that already admitted the batch — its own hashes
-  * would screen it, the recompute would emit ZERO survivors, and the
-  * "idempotent" overwrite would destroy the correct rows. The
-  * committed pack is therefore the CANONICAL survivor set: on
+  * per-batch-id overwrite sink the other twins use
+  * ([[BatchDirs.start]]) is NOT enough here, because a replayed
+  * batch's recomputed serve would run against a store that already
+  * admitted the batch — its own hashes would screen it, the
+  * recompute would emit ZERO survivors, and the "idempotent"
+  * overwrite would destroy the correct rows. The committed pack is
+  * therefore the CANONICAL survivor set: on
   * replay (the batch directory's _SUCCESS marker exists) the handler
   * skips the serve entirely, re-derives the survivors from the
   * written rows, and re-runs only the absorb (which no-ops at the
@@ -56,7 +57,7 @@ object NightlyStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val dir = s"$outDir/batch=$batchId"
+        val dir = BatchDirs.dir(outDir, batchId)
         def absorbWritten(): Unit = {
           val sIds = spark.read.parquet(dir).select("doc_id")
           graft.operators.Pipeline.p29Absorb(spark,
@@ -65,9 +66,8 @@ object NightlyStream {
         }
         if (committed(spark, dir)) absorbWritten()
         else if (!batch.isEmpty) {
-          graft.operators.Pipeline
-            .p29ServeBatch(spark, batch, contextLen, ns)
-            .write.mode("overwrite").format("parquet").save(dir)
+          BatchDirs.save(graft.operators.Pipeline
+            .p29ServeBatch(spark, batch, contextLen, ns), outDir, batchId)
           absorbWritten()
         }
       }

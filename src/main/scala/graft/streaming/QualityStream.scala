@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest QUALITY GATE — t14's keep/drop verdict as PURE
   * per-row array algebra, so the gate composes into any structured
@@ -100,9 +101,8 @@ object QualityStream {
   /** STREAMING twin of the t23 model-based quality classifier: score
     * arriving documents against a FROZEN vocabulary+weight artifact
     * — the serving shape of a learned curation gate (weights/vocab
-    * are frozen at train time; arrivals only read them). foreachBatch
-    * with per-batch-id overwrite sinks (the GraphStream idempotent-
-    * replay pattern): the scoring core is LITERALLY
+    * are frozen at train time; arrivals only read them), per
+    * micro-batch through [[BatchDirs]]: the scoring core is LITERALLY
     * [[graft.operators.Quality.classifierScores]], so the streamed
     * gate cannot drift from the oracle-gated batch key. The frozen
     * vocab binds once at stream start — correct here, because the
@@ -112,24 +112,14 @@ object QualityStream {
     * convention under a frozen vocabulary). */
   def classifierStream(docStream: DataFrame, vocab: DataFrame,
       outDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName("quality_classifier")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val tok = batch.select(col("doc_id"),
-            explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
-          graft.operators.Quality.classifierScores(tok, vocab)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-        }
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, "quality_classifier", outDir, checkpoint,
+        trigger) { batch =>
+      graft.operators.Quality.classifierScores(
+        batch.select(col("doc_id"),
+          explode(graft.functions.TextFns.tokens(col("text"))).as("term")),
+        vocab)
+    }
 
   /** STREAMING twin of the STORE-BACKED classifier serving path
     * (round 15 — [[classifierStream]] serves the fixed generated
@@ -137,60 +127,33 @@ object QualityStream {
     * [[graft.sources.ClassifierStore.freeze]] shipped): arriving
     * documents score per micro-batch through
     * [[graft.sources.ClassifierStore.scoreFrozen]] — the literal
-    * training evaluation rule over the persisted vocab+weights. The
-    * pointer resolves ONCE PER MICRO-BATCH (the GraphStream decision
-    * record), so a mid-stream [[graft.sources.ClassifierStore
-    * .refreezeIfStale]] lands between batches and every scored batch
-    * is wholly one generation; per-batch-id overwrite sinks keep
-    * checkpoint replays idempotent. */
+    * training evaluation rule over the persisted vocab+weights. A
+    * mid-stream [[graft.sources.ClassifierStore.refreezeIfStale]]
+    * lands between batches ([[BatchDirs]]). */
   def frozenClassifierStream(docStream: DataFrame, name: String,
       outDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName(s"frozen_classifier_$name")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.ClassifierStore
-            .scoreFrozen(batch.sparkSession, batch, name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, s"frozen_classifier_$name", outDir,
+        checkpoint, trigger) { batch =>
+      graft.sources.ClassifierStore.scoreFrozen(batch.sparkSession, batch, name)
+    }
 
   /** STREAMING twin of the STORE-BACKED tokenizer serving path
     * (round 16 — the tokenizer family's member of the
     * [[frozenClassifierStream]] lattice): arriving documents
     * tokenize per micro-batch through
     * [[graft.sources.TokenizerStore.tokenCountsFrozen]] — the
-    * literal t31 fold over the persisted merge table. The pointer
-    * resolves ONCE PER MICRO-BATCH (the GraphStream decision
-    * record), so a mid-stream [[graft.sources.TokenizerStore
-    * .refreezeIfStale]] lands between batches and every tokenized
-    * batch is wholly one generation; per-batch-id overwrite sinks
-    * keep checkpoint replays idempotent. */
+    * literal t31 fold over the persisted merge table. A mid-stream
+    * [[graft.sources.TokenizerStore.refreezeIfStale]] lands between
+    * batches ([[BatchDirs]]). */
   def frozenTokenizerStream(docStream: DataFrame, name: String,
       outDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName(s"frozen_tokenizer_$name")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.TokenizerStore
-            .tokenCountsFrozen(batch.sparkSession, batch, name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, s"frozen_tokenizer_$name", outDir,
+        checkpoint, trigger) { batch =>
+      graft.sources.TokenizerStore
+        .tokenCountsFrozen(batch.sparkSession, batch, name)
+    }
 
   /** CONTINUOUS drift monitor for the frozen CLASSIFIER artifact —
     * the last monitor-lattice asymmetry closed (VERDICT r16: media,
@@ -200,34 +163,19 @@ object QualityStream {
     * (doc_id, text) micro-batch grades against the live frozen
     * generation through the ONE staleness definition
     * ([[graft.sources.ClassifierStore.staleness]] — unseen-token
-    * share + mean-score drift vs the stored baseline); the pointer
-    * re-binds per trigger, so the report always reads the CURRENT
-    * freeze across a mid-stream
-    * [[graft.sources.ClassifierStore.refreezeIfStale]]. One drift
-    * row per micro-batch lands under its batch id (idempotent
-    * overwrite — checkpoint replays rewrite, never double-count); a
-    * deployment tails the rows and refreezes when unseen_share
-    * trips. Cost per trigger: arrival-token-scale ⋈ vocab — never a
-    * corpus pass (the Bm25Stream.driftStream decision record
-    * verbatim). */
+    * share + mean-score drift vs the stored baseline), so the report
+    * always reads the CURRENT freeze ([[BatchDirs]]). One drift row
+    * per micro-batch lands under its batch id; a deployment tails the
+    * rows and refreezes when unseen_share trips. Cost per trigger:
+    * arrival-token-scale ⋈ vocab — never a corpus pass (the
+    * Bm25Stream.driftStream decision record verbatim). */
   def classifierDriftStream(docStream: DataFrame, name: String,
       outDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName(s"classifier_drift_$name")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.ClassifierStore
-            .staleness(batch.sparkSession, batch, name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, s"classifier_drift_$name", outDir,
+        checkpoint, trigger) { batch =>
+      graft.sources.ClassifierStore.staleness(batch.sparkSession, batch, name)
+    }
 
   /** CONTINUOUS drift monitor for the frozen TOKENIZER artifact —
     * [[classifierDriftStream]]'s sibling for the merge table: each
@@ -236,30 +184,16 @@ object QualityStream {
     * through the ONE staleness definition
     * ([[graft.sources.TokenizerStore.staleness]] — the literal t32
     * mass aggregate, both bounded components collected eagerly so
-    * the row is arrival-only lineage). Pointer re-binds per trigger
-    * (wholly-one-generation across a mid-stream
-    * [[graft.sources.TokenizerStore.refreezeIfStale]]); per-batch-id
-    * overwrite sinks keep checkpoint replays idempotent. Cost per
-    * trigger: ONE arrival-scaled aggregate — the fold is per-row
-    * Column algebra, never a corpus pass. */
+    * the row is arrival-only lineage), one generation per batch
+    * ([[BatchDirs]]). Cost per trigger: ONE arrival-scaled aggregate
+    * — the fold is per-row Column algebra, never a corpus pass. */
   def tokenizerDriftStream(docStream: DataFrame, name: String,
       outDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .queryName(s"tokenizer_drift_$name")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.TokenizerStore
-            .staleness(batch.sparkSession, batch, name)
-            .write.mode("overwrite").format("parquet")
-            .save(s"$outDir/batch=$batchId")
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchDirs.start(docStream, s"tokenizer_drift_$name", outDir,
+        checkpoint, trigger) { batch =>
+      graft.sources.TokenizerStore.staleness(batch.sparkSession, batch, name)
+    }
 
   /** Per-document verdicts over any (doc_id, text) frame — batch or
     * streaming (the plan is stateless either way). */

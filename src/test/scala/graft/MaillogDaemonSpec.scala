@@ -63,21 +63,30 @@ class MaillogDaemonSpec extends SparkSpec {
     assert(deliveries.first().getAs[String]("delivery_status") === "sent")
   }
 
-  test("single growing file: mid-stream appends land in all four tables") {
+  test("single growing file: mid-stream appends land in all four tables")(
+    tailGrowingFile(_.toString))
+
+  // the tailer spools with local file IO, the stream reads through
+  // Hadoop: a `file:` URI checkpoint must resolve to one directory
+  test("single growing file with a file: URI checkpoint")(
+    tailGrowingFile(_.toUri.toString))
+
+  private def tailGrowingFile(spell: java.nio.file.Path => String): Unit = {
     val dir = Files.createTempDirectory("tailrun").toString
     val file = s"$dir/maillog"
     val out = Files.createTempDirectory("tailout").toString
-    val ckpt = Files.createTempDirectory("tailckpt").toString
+    val ckpt = spell(Files.createTempDirectory("tailckpt"))
     Files.write(java.nio.file.Paths.get(file),
       ("Jan 02 03:04:05 mx1 postfix/smtpd[101]: AB1: client=host1.example.com[10.0.0.1]\n" +
        "Jan 02 03:04:06 mx1 postfix/qmgr[102]: AB1: from=<a@example.com>, size=100, nrcpt=1 (queue active)\n").getBytes)
 
     // -maillog is a FILE, the reference's default deployment — the
     // daemon must follow appends, not just new files in a directory
-    val qs = MaillogDaemon.start(spark,
-      args = Array("-maillog", file, "-out", out, "-checkpoint", ckpt, "-year", "2024"),
-      trigger = Trigger.ProcessingTime("500 milliseconds"))
+    var qs = Seq.empty[org.apache.spark.sql.streaming.StreamingQuery]
     try {
+      qs = MaillogDaemon.start(spark,
+        args = Array("-maillog", file, "-out", out, "-checkpoint", ckpt, "-year", "2024"),
+        trigger = Trigger.ProcessingTime("500 milliseconds"))
       def count(t: String): Long =
         try spark.read.parquet(s"$out/$t").count() catch { case _: Exception => 0L }
       def waitFor(cond: => Boolean): Boolean = {
@@ -101,7 +110,17 @@ class MaillogDaemonSpec extends SparkSpec {
           s"(logs=${count("pfmaillog2db_logs")}, deliveries=${count("pfmaillog2db_deliveries")}, " +
           s"messages=${count("pfmaillog2db_messages")}, clients=${count("pfmaillog2db_clients")})")
       assert(waitFor(count("pfmaillog2db_clients") >= 2), "appended client upserted")
-    } finally qs.foreach(_.stop())
+    } finally {
+      qs.foreach(_.stop())
+      // a tailer that reads a `file:` URI as a relative path spools
+      // under `<cwd>/file:/…`: remove that tree and its emptied parents
+      if (ckpt.startsWith("file:")) {
+        val stray = new java.io.File(ckpt)
+        org.apache.commons.io.FileUtils.deleteQuietly(stray)
+        Iterator.iterate(stray.getParentFile)(_.getParentFile)
+          .takeWhile(_ != null).foreach(_.delete()) // deletes only empty dirs
+      }
+    }
   }
 
   test("daemon against an EMPTY database auto-creates and fills all four tables") {

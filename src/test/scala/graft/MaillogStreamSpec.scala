@@ -84,11 +84,21 @@ class MaillogStreamSpec extends SparkSpec {
   private val driftLine =
     "Jan 02 03:07:00 mx1 postfix/smtpd[101]: connect from unknown[1.2.3.4]"
 
-  test("stream_parse_drift: streamed coverage snapshot == batch m10 on the same spool") {
+  test("stream_parse_drift: streamed coverage snapshot == batch m10 on the same spool")(
+    coverageReplay(_.getPath))
+
+  // the snapshots are written, listed and pruned through one Hadoop
+  // filesystem, so a `file:` URI `out` behaves as a plain path does
+  test("stream_parse_drift with a file: URI out")(coverageReplay(_.toURI.toString))
+
+  /** Three coverage runs on one checkpoint into `spell(outDir)`. */
+  private def coverageReplay(spell: java.io.File => String): Unit = {
     val dir = Files.createTempDirectory("maillog-cov").toFile
     val ckpt = Files.createTempDirectory("ckpt-cov").toString
-    val out = Files.createTempDirectory("out-cov").toString + "/coverage"
+    val outDir = new java.io.File(Files.createTempDirectory("out-cov").toFile, "coverage")
+    val out = spell(outDir)
     val avail = org.apache.spark.sql.streaming.Trigger.AvailableNow()
+    def snaps() = outDir.list().filter(_.startsWith("snap=")).sorted.toSeq
 
     Files.write(new java.io.File(dir, "maillog.1").toPath,
       lines1.mkString("\n").getBytes)
@@ -112,23 +122,31 @@ class MaillogStreamSpec extends SparkSpec {
         "n_smtp", "n_unmatched")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
+    // batch m10 aggregate over the SAME spool through the one shared
+    // definition (coverageOf) — the test-oracle pin
+    def batch() = rows(graft.operators.MaillogOps.coverageOf(
+      Maillog.parsed(spark.read.text(dir.getAbsolutePath)
+        .withColumnRenamed("value", "line"))))
 
     val streamed = rows(MaillogStream.latestCoverage(spark, out))
     // per-batch layout (ADVICE r15): two AvailableNow runs landed two
     // snapshots; both retained (prune keeps the runner-up so a reader
     // that just resolved it never loses the dir mid-read)
-    assert(new java.io.File(out).listFiles()
-      .count(_.getName.startsWith("snap=")) == 2)
-    // batch m10 aggregate over the SAME spool through the one shared
-    // definition (coverageOf) — the test-oracle pin
-    val batch = rows(graft.operators.MaillogOps.coverageOf(
-      Maillog.parsed(spark.read.text(dir.getAbsolutePath)
-        .withColumnRenamed("value", "line"))))
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
+    assert(snaps() == Seq("snap=0", "snap=1"))
+    assert(streamed == batch(), s"streamed=$streamed batch=${batch()}")
     // and the drift signal actually fires: the unknown message shape
     // reads as an unmatched line on its process
     assert(streamed.exists { case (p, _, _, _, _, _, u) =>
       p == "postfix/smtpd" && u == 1L })
+
+    // a third snapshot prunes the oldest
+    Files.write(new java.io.File(dir, "maillog.3").toPath,
+      lines2.take(1).mkString("\n").getBytes)
+    MaillogStream.coverageStream(
+      MaillogStream.parsedStream(spark, dir.getAbsolutePath),
+      out, ckpt, avail).awaitTermination()
+    assert(snaps() == Seq("snap=1", "snap=2"))
+    assert(rows(MaillogStream.latestCoverage(spark, out)) == batch())
   }
 
   test("the daemon starts the coverage monitor behind -coverage") {
